@@ -5,11 +5,8 @@ import org.apache.spark.sql.SparkSession
 /**
  * The engine's canonical session builder. Every driver-facing entry point
  * (Bench, Verify, Explain) and the test harness build their session HERE,
- * so the full extension surface — the graft_* SQL functions and the
- * LambdaCse optimizer rule — is active on every documented path. Before
- * this, the rule was only exercised by its own spec: a user's naive
- * duplicated-HOF query ran 8-32x slower through the shipped mains than the
- * engine's tests suggested.
+ * so the extension surface — the graft_* SQL functions — is active on
+ * every documented path, and the tests observe the driver's real config.
  */
 object EngineSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =

@@ -14,7 +14,8 @@ import graft.functions.{DotProduct, DotProductConst, GobDecode, GobEncode, MsgPa
  * `spark.sql("... WHERE graft_phrase(toks, 'a', 'b')")` parses, analyzes,
  * and codegens like any built-in. The DataFrame API does not need this —
  * the typed wrappers in graft.functions build the expressions directly —
- * but a SQL-first user of the engine gets the same operators.
+ * but a SQL-first user of the engine gets the same operators. Functions
+ * are all it injects: no optimizer rule runs in an engine session.
  *
  * Functions:
  *  - `graft_phrase(tokens, w1, w2, ...)` — consecutive-token phrase match
@@ -35,9 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // lambda-aware CSE: hoists repeated higher-order subtrees codegen's own
-    // subexpression elimination cannot (see graft.plans.LambdaCse)
-    ext.injectOptimizerRule(_ => graft.plans.LambdaCse)
   }
 }
 

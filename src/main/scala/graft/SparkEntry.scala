@@ -4120,7 +4120,7 @@ object SparkEntry {
     Q("q_patch_merge", // the 8th patch opcode (proto:3084-3089): map merge,
       // incoming keys override, others survive.
       // NO spread: the r17-stashed q_patch_indexed-style spread was
-      // A/B-rejected here (r18 PatchSpreadLab, same-JVM interleaved:
+      // A/B-rejected here (OPTIMIZATION_r18.md, same-JVM interleaved:
       // plain 0.42-0.48 s vs spread 0.53-0.64 s warm) — the map merge is
       // too light to pay for exchanging the struct payload
       (s, d) => {

@@ -199,15 +199,6 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "et", "des"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2"))
 
-  def langScores(text: Column): Column = {
-    val toks = tokens(text)
-    map_from_arrays(
-      array(LangMarkers.map(m => lit(m._1)): _*),
-      array(LangMarkers.map { case (_, ws) =>
-        size(filter(toks, t => t.isin(ws: _*))).cast(DoubleType) / size(toks)
-      }: _*))
-  }
-
   /** Marker hit count for one language's word list. */
   def langHits(text: Column, lang: String): Column = {
     val ws = LangMarkers.toMap.apply(lang)
@@ -215,19 +206,26 @@ object TextFunctions {
   }
 
   /** Predicted language = argmax marker hits, first-listed language wins
-    * ties; "und" when no marker hits at all. Shape chosen (greatest + CASE
-    * chain) so the DuckDB oracle is the literal same expression. The
-    * repeated `split` subtrees here are LAMBDA-FREE, so whole-stage
-    * codegen's subexpression elimination already dedupes them — a
-    * let-binding wrapper was measured SLOWER (0.34 s -> 0.58 s at sf0.1);
-    * only lambda-containing subtrees (which CSE skips) need the binding
-    * idiom used in minhashSignature/shingles/wordIndex. */
+    * ties; "und" when no marker hits at all, and for NULL text under ANSI
+    * mode (the default; size(NULL) is NULL). The array_max + CASE chain
+    * mirrors the DuckDB oracle's greatest + CASE expression.
+    *
+    * The five hit counts are let-bound (array(x) + transform) because each
+    * is a `filter` lambda: codegen's subexpression elimination skips
+    * lambda-containing subtrees, so referencing the counts directly in the
+    * max and in every CASE branch plans 35 marker walks per row instead of
+    * 5. (Binding the lambda-FREE `split` as well was measured slower —
+    * CSE already dedupes that.) */
   def langId(text: Column): Column = {
-    val hits = LangMarkers.map { case (lang, _) => lang -> langHits(text, lang) }
-    val best = greatest(hits.map(_._2): _*)
-    hits.foldLeft(when(best === 0, lit("und"))) {
-      case (acc, (lang, h)) => acc.when(h === best, lit(lang))
-    }.otherwise(lit("und"))
+    val langs = LangMarkers.map(_._1)
+    element_at(
+      transform(array(array(langs.map(langHits(text, _)): _*)), hits => {
+        val best = array_max(hits)
+        langs.indices.foldLeft(when(best === 0, lit("und"))) {
+          (acc, i) => acc.when(hits(i) === best, lit(langs(i)))
+        }.otherwise(lit("und"))
+      }),
+      1)
   }
 
   // --- PII scanning ---------------------------------------------------------

@@ -99,6 +99,19 @@ class CurationRulesSpec extends SparkSpec {
       "fused counts diverge from the HOF reference")
   }
 
+  test("langId: NULL, empty and marker-free text are 'und'; ties go to " +
+    "the first-listed language") {
+    val docs = Seq((1L, null.asInstanceOf[String]), (2L, ""),
+      (3L, "cake bake lake"), (4L, "la"), (5L, "the la"),
+      (6L, "der die la")
+    ).toDF("doc_id", "text")
+    val got = docs.orderBy($"doc_id")
+      .select(graft.functions.TextFunctions.langId($"text"))
+      .collect().map(_.getString(0)).toSeq
+    // "la" is both es and fr: es is listed first; "the la" ties en/es/fr
+    assert(got == Seq("und", "und", "und", "es", "en", "de"))
+  }
+
   test("repeatEpochs: cap binds, zero-share group allocates nothing, " +
     "effective tokens = epochs * mass") {
     val docs = Seq(

@@ -519,6 +519,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("langId walks each language's markers once: 5 filter HOFs per plan") {
+    // TF.langId let-binds its five hit counts; referencing them directly in
+    // the max and in every CASE branch plans 35 walks (lambdas defeat
+    // codegen's subexpression elimination)
+    for (name <- Seq("q_langid", "q_curation")) {
+      val p = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.toString
+      val walks = "filter\\(".r.findAllIn(p).size
+      assert(walks == 5, s"$name: expected 5 filter( HOFs, got $walks:\n$p")
+    }
+  }
+
   test("json extract parses each row's props exactly once") {
     // the evalOnce barrier (guide §4.4) must hold the filter ABOVE the
     // projection — without it pushdown clones get_json_object into the

@@ -12,7 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   // the same construction path as the shipped mains (EngineSession), so
   // every plan assertion in the suites runs under the driver's real config
-  // — extensions (SQL fns + LambdaCse) included
+  // — the graft_* SQL function extensions included
   lazy val session: SparkSession = EngineSession.builder("local[4]", "4")
     .appName("graft-test")
     // plan-string assertions (PlanSpec) read PushedFilters/ReadSchema out
