@@ -132,8 +132,12 @@ object Bench {
     // (skipped for filtered local-iteration runs — a partial map must never
     // overwrite the committed full record)
     if (args.isEmpty) {
-      val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "/root/repo/bench_full.json")
+      // an N-core run (N != 32) must not overwrite the 32-core default record
+      val fullPath =
+        if (cpus == "32" || sys.env.contains("SPARK_GRAFT_BENCH_OUT")) outPath
+        else outPath.stripSuffix(".json") + s"_c$cpus.json"
       // per-query spark/duckdb ratios where both engines produced a time;
       // the two totals compare over the COMMON query set only
       val common = results.collect {
@@ -202,7 +206,7 @@ object Bench {
         else ""
       println(s"""{"queries":${kept.mkString("{", ",", "}")},""" +
         s""""queries_omitted":${results.size - kept.size},""" +
-        s""""full_record":"bench_full.json",""" + ratioTail +
+        s""""full_record":${JsonUtil.str(new java.io.File(fullPath).getName)},""" + ratioTail +
         s""""metric":"total","value":$total,"unit":"sec","sf":$sfJ}""")
     }
 

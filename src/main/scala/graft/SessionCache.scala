@@ -15,9 +15,11 @@ import org.apache.spark.sql.SparkSession
  * SparkListener registered once per SparkContext drops every entry whose
  * session rode that context when the application ends (stopping ANY
  * session stops its shared context, so application end is exactly the
- * lifetime boundary of all its sessions' cached plans).
+ * lifetime boundary of all its sessions' cached plans). `onEvict` runs on
+ * every entry that eviction or [[clear]] drops — [[Fixture]] deletes a
+ * fixture's temp directory there.
  */
-private[graft] final class SessionCache[V] {
+private[graft] final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
   private val m = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), V]
   SessionCache.register(this)
 
@@ -35,19 +37,18 @@ private[graft] final class SessionCache[V] {
     m.keys.foreach { k =>
       // a stopped session's context reference stays valid after stop —
       // comparing contexts (not sessions) evicts every session that rode it
-      if (k._1.sparkContext eq sc) m.remove(k)
+      if (k._1.sparkContext eq sc) m.remove(k).foreach(onEvict)
     }
 
-  def clear(): Unit = m.clear()
+  def clear(): Unit = m.keys.foreach(k => m.remove(k).foreach(onEvict))
 
-  private[graft] def sizeForTesting: Int = m.size
   private[graft] def entriesForTesting(s: SparkSession): Int =
     m.keys.count(_._1 eq s)
 }
 
 private[graft] object SessionCache {
   // all caches ever constructed (a handful of static singletons — Tables'
-  // memos and SparkEntry's fixture caches — so the set is tiny and fixed)
+  // memos and one per Fixture — so the set is tiny and fixed)
   private val caches =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SessionCache[_]]()
   private val hooked =

@@ -80,7 +80,7 @@ object Tables {
   /** Cheap content fingerprint of an artifact directory: the sorted
     * (name, length, mtime) listing, hashed. Absent dir => "absent" (the
     * read then fails exactly like an un-memoized read would). */
-  private def fingerprint(spark: SparkSession, dir: String): String = {
+  private[graft] def fingerprint(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) "absent"

@@ -839,7 +839,8 @@ object Dedup {
     // df measure bit-identical even on degenerate null-keyed rows (which
     // then contribute no pairs, exactly like the old inner equi-joins
     // dropped them)
-    val groups = tracked(sh.groupBy(col("_s"))
+    // a NULL shingle is no shingle: no group, so no pair and no df
+    val groups = tracked(sh.filter(col("_s").isNotNull).groupBy(col("_s"))
       .agg(sort_array(collect_list(col("_k"))).as("_ks"),
         count(lit(1)).as("_c"))
       .filter(col("_c") <= maxDf))

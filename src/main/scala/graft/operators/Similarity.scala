@@ -235,7 +235,10 @@ object Similarity {
    * (the BENCH_NOTES eager-collect finding, applied to the one collect
    * that MUST stay eager because the ADC kernel needs a literal LUT).
    * A rebuild flips the pointer to a NEW v=N+1 → a new key; bounded by a
-   * size cap so a build-heavy test session cannot hoard.
+   * size cap so a build-heavy test session cannot hoard. Keys carry the
+   * table's [[graft.Tables.fingerprint]]: a root rebuilt OUT-OF-BAND to the
+   * same v=N path (test fixtures, a manual wipe — the CAS lifecycle never
+   * reuses a version number) is re-collected, never serving stale LUTs.
    */
   private val modelMemo =
     scala.collection.concurrent.TrieMap.empty[String, AnyRef]
@@ -244,28 +247,11 @@ object Similarity {
     modelMemo.getOrElseUpdate(key, load).asInstanceOf[T]
   }
 
-  /** Cheap content fingerprint of a frozen model table, folded into the
-    * memo key: an artifact root deleted and rebuilt OUT-OF-BAND to the
-    * same v=N path (test fixtures, a manual wipe — the CAS lifecycle
-    * itself never reuses a version number) changes the file set's
-    * lengths/mtimes, so the stale codebook/centroid literals are
-    * re-collected instead of silently corrupting ADC rankings. One FS
-    * listing per probe — noise next to the collect it guards. */
-  private def tableFingerprint(spark: org.apache.spark.sql.SparkSession,
-                               path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString(",").hashCode.toString
-  }
-
   /** Bounded nlist-row collect — the codebook-collect contract class. */
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             vdir: String): Array[Array[Float]] =
     memoized(s"centroids|$vdir|" +
-        tableFingerprint(spark, s"$vdir/_centroids")) {
+        graft.Tables.fingerprint(spark, s"$vdir/_centroids")) {
       val p = s"$vdir/_centroids"
       require(new org.apache.hadoop.fs.Path(p).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -1355,7 +1341,7 @@ object Similarity {
   private def readCodebook(spark: org.apache.spark.sql.SparkSession,
                            vdir: String): Array[Array[Long]] =
     memoized(s"codebook|$vdir|" +
-        tableFingerprint(spark, s"$vdir/_codebook")) {
+        graft.Tables.fingerprint(spark, s"$vdir/_codebook")) {
       spark.read.parquet(s"$vdir/_codebook")
         .orderBy(col("c")).collect()
         .map(_.getSeq[Long](1).toArray)

@@ -30,21 +30,10 @@ object Snapshots {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def pointer(dir: String) = new Path(s"$dir/_latest")
-
-  /** Latest committed version, if any. */
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(pointer(dir))) None
-    else {
-      val in = f.open(pointer(dir))
-      val body = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      Some(body.toLongOption.getOrElse(throw new IllegalStateException(
-        s"corrupt snapshot pointer at ${pointer(dir)}: '$body' is not a " +
-          "version number — only flipPointer writes this file; something " +
-          "else modified the table directory")))
-    }
-  }
+  /** Latest committed version, if any — read through the ONE shared
+    * pointer reader, as [[flipPointer]] writes through the shared flip. */
+  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
+    IndexLifecycle.currentVersionAt(spark, dir, "_latest")
 
   /** Version numbers present under `dir`. Non-numeric `v=*` entries (a
     * stray `v=3.bak` from a manual copy, say) are foreign files, not

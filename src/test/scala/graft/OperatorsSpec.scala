@@ -576,6 +576,15 @@ class OperatorsSpec extends SparkSpec {
     assert(Snapshots.read(spark, dir).count() == 1)
   }
 
+  test("a corrupt snapshot pointer throws, naming the pointer path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_badptr").toString + "/t"
+    Snapshots.commit(Seq((1L, "a")).toDF("k", "v"), dir)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_latest"), "v1?")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "._latest.crc")) // stale now
+    val e = intercept[IllegalStateException](Snapshots.currentVersion(spark, dir))
+    assert(e.getMessage.contains(s"$dir/_latest") && e.getMessage.contains("v1?"), e.getMessage)
+  }
+
   test("lock names are validated; sweepDebris removes only lapsed tombs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_locks2").toString
     // names that would alias tomb/temp files or walk the path are refused
@@ -2536,6 +2545,21 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hits == Map(1L -> 1L, 2L -> 1L),
       s"phrase hits must count each doc's occurrence exactly once: $hits")
+  }
+
+  test("prebuilt containment: a NULL shingle forms no group, adds no pair") {
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma zeta"),
+      (3L, "one two three four five")).toDF("doc_id", "text")
+    val p = java.nio.file.Files.createTempDirectory("graft-nullsh").toString + "/sh"
+    Dedup.buildShinglePostings(docs, "text", "doc_id", p)
+    def contain() = Dedup.containmentPairsPrebuilt(spark, p, minContainment = 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val before = contain()
+    assert(before.map(r => (r._1, r._2)) == Seq((1L, 2L)))
+    // one null-_s posting shared by keys 1 and 3, which share no shingle
+    Seq[(Long, Option[Long], Int)]((1L, None, 3), (3L, None, 3)).toDF("_k", "_s", "_sn")
+      .write.mode("append").parquet(IndexLifecycle.resolveDir(spark, p))
+    assert(contain() == before)
   }
 
   test("gram and shingle artifacts store their build width (_gk/_sn): " +

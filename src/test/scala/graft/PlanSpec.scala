@@ -471,6 +471,16 @@ class PlanSpec extends SparkSpec {
       "appendTextIndex's direct persists lost their paired finally-unpersist")
   }
 
+  test("every temp directory in main sources comes from the Fixture registry") {
+    // the registry deletes what it creates; a raw one elsewhere leaks per run
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+    val hits = files.flatMap(p => java.nio.file.Files.readAllLines(p).asScala
+      .filter(_.contains("createTempDirectory")).map(l => s"$p: $l")).toVector
+    assert(hits.size == 1 && hits.head.contains("graft/Fixtures.scala:"), hits.mkString("\n"))
+  }
+
   test("kmeans assignment is scan-stage: centroids ride as literals, no shuffle") {
     // the ASSIGNMENT plan (what every pass and every downstream consumer
     // runs) must be a projection over the (cached) quantized scan — the

@@ -28,6 +28,45 @@ class SessionCacheSpec extends SparkSpec {
     assert(get() == "v3") // rebuilt after eviction, not served stale
   }
 
+  /** A directory fixture under a fresh prefix + the temp dirs carrying it. */
+  private def dirFixture(build: String => Unit) = {
+    val prefix = s"graft_fxspec_${java.util.UUID.randomUUID()}_"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    (Fixture.dir(prefix, "out")((_, _, path) => build(path)),
+      () => tmp.listFiles().filter(_.getName.startsWith(prefix)).toSeq)
+  }
+
+  test("Fixture: one directory per session, deleted at application end") {
+    val (fx, dirs) = dirFixture(path => new java.io.File(path).mkdirs())
+    val p1 = fx(spark, "d")
+    assert(new java.io.File(p1).isDirectory && fx(spark, "d") == p1)
+    val p2 = fx(spark.newSession(), "d")
+    assert(p2 != p1 && new java.io.File(p2).isDirectory && dirs().size == 2)
+    SessionCache.evictAll(spark.sparkContext)
+    assert(dirs().isEmpty, s"evicted fixture directories left: ${dirs()}")
+  }
+
+  test("Fixture: a build that throws rethrows and leaves no directory") {
+    val (fx, dirs) = dirFixture(_ => throw new IllegalStateException("boom"))
+    assert(intercept[IllegalStateException](fx(spark, "d")).getMessage == "boom")
+    assert(dirs().isEmpty)
+  }
+
+  test("Fixture: two concurrent first accesses leave exactly one directory") {
+    val bothIn = new java.util.concurrent.CountDownLatch(2)
+    val (fx, dirs) = dirFixture { path =>
+      bothIn.countDown()
+      bothIn.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      new java.io.File(path).mkdirs()
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val got = Seq.fill(2)(pool.submit[String](() => fx(spark, "race"))).map(_.get())
+      assert(got.distinct.size == 1 && dirs().size == 1 &&
+        new java.io.File(got.head).isDirectory, s"$got ${dirs()}")
+    } finally pool.shutdown()
+  }
+
   test("Tables.artifact: a post-append probe sees the appended files") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_artmemo_").resolve("postings").toString
