@@ -2652,7 +2652,8 @@ object SparkEntry {
 
     Q("q_hybrid_prebuilt", // the 100 TB serving form of hybrid retrieval:
       // BOTH sides run against prebuilt artifacts only — bm25TopKPrebuilt
-      // reads its terms' postings rows (dl denormalized) + 1-row stats,
+      // reads its terms' postings rows (dl denormalized; N, Σdl and df
+      // are memoized per index version and enter the plan as literals),
       // pqTopKPrebuilt ADC-scans the m-int codes — fused with the same
       // RRF combiner as q_hybrid_rrf. Neither the corpus text nor the raw
       // embeddings appear anywhere in the plan (PlanSpec-pinned): a

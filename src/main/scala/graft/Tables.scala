@@ -52,8 +52,8 @@ object Tables {
    * Lazy analyzed relation for a MUTABLE artifact directory (postings,
    * signature tables, index codes — anything maintenance can append to),
    * memoized per (session, dir, content fingerprint). The fingerprint is
-   * ONE `listStatus` of the directory (names + lengths + mtimes — the
-   * [[graft.operators.Similarity]] model-table discipline), so the memo
+   * ONE `listStatus` of the directory (names + lengths + mtimes, shared
+   * with the [[metadata]] memo), so the memo
    * costs one FS round trip per probe and replaces Spark's full relation
    * construction: driver-side recursive listing, parquet footer schema
    * read, and re-analysis, re-paid per probe by every prebuilt serving
@@ -78,16 +78,88 @@ object Tables {
   private val artifactMemo = new SessionCache[(String, DataFrame)]
 
   /** Cheap content fingerprint of an artifact directory: the sorted
-    * (name, length, mtime) listing, hashed. Absent dir => "absent" (the
-    * read then fails exactly like an un-memoized read would). */
+    * (name, length, mtime) listing, SHA-256 hashed — a 32-bit string hash
+    * collides on listings as close as `Aa.parquet` vs `BB.parquet`, and
+    * both memos here key on this value (unit-pinned). Fields and entries
+    * are NUL-separated, a byte no file name holds. Absent dir => "absent"
+    * (the read then fails exactly like an un-memoized read would). */
   private[graft] def fingerprint(spark: SparkSession, dir: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString(",").hashCode.toString
+    else {
+      val listing = fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
+        .map(s => Seq(s.getPath.getName, s.getLen, s.getModificationTime).mkString("\u0000"))
+        .mkString("\u0000\u0000")
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    }
   }
+
+  /**
+   * Driver memo for the small per-version METADATA a serving probe holds
+   * as plan literals — PQ codebooks and IVF centroids ([[graft.operators.Similarity]]),
+   * a text index's (N, Σdl) and per-term df ([[graft.operators.TermStats]]).
+   * One entry per TABLE SET (the dirs the items are read from) holds the
+   * set's [[fingerprint]]s and its items: an append or an out-of-band
+   * rewrite changes a listing, so the next read sees other fingerprints
+   * and replaces the entry — a stale value is never served, and a
+   * superseded listing's items are dropped, not left to age out (the
+   * [[artifact]] invalidation rule, applied to collected values). A miss
+   * loads the missing items in one call, once per (listing, item); a
+   * repeated probe pays one `listStatus` per dir instead of a Spark job
+   * (its planning, codegen and per-job scheduling floor). Values are
+   * session-independent driver data (arrays, longs), so the memo is not
+   * per session.
+   *
+   * Bounds: at most [[MetadataItems]] items per table set, past which
+   * THAT set clears — so a text index serving a wide vocabulary never
+   * evicts another table's codebook or centroids — and one load of more
+   * items keeps only the first [[MetadataItems]]; at most
+   * [[MetadataTables]] table sets, past which the whole memo clears (the
+   * model-table memo's old bound). Each item is a bounded collect (a
+   * codebook's ksub rows, a centroid table's nlist rows, one term's df);
+   * a reload is one collect (unit-pinned).
+   */
+  private[graft] def metadata[T](spark: SparkSession, dir: String,
+                                 item: String)(load: => T): T =
+    metadataEach[T](spark, Seq(dir), Seq(item))(_ => Map(item -> load))(item)
+
+  /** [[metadata]] for several items of one table set at its current
+    * listings: the items not yet memoized load in ONE `load(missing)`
+    * call, which must return a value for every item it is given. */
+  private[graft] def metadataEach[T](spark: SparkSession, dirs: Seq[String],
+                                     items: Seq[String])(
+      load: Seq[String] => Map[String, T]): Map[String, T] = {
+    val fps = dirs.map(fingerprint(spark, _))
+    val memo = metadataMemo.get(dirs) match {
+      case Some((`fps`, m)) => m
+      case _ =>
+        if (metadataMemo.size >= MetadataTables && !metadataMemo.contains(dirs))
+          metadataMemo.clear()
+        val m = scala.collection.concurrent.TrieMap.empty[String, Any]
+        metadataMemo.put(dirs, (fps, m))
+        m
+    }
+    val hits = items.flatMap(i => memo.get(i).map(i -> _.asInstanceOf[T])).toMap
+    val missing = items.distinct.filterNot(hits.contains)
+    if (missing.isEmpty) hits
+    else {
+      val got = load(missing)
+      if (memo.size + missing.size > MetadataItems) memo.clear()
+      missing.take(MetadataItems).foreach(i => memo.put(i, got(i)))
+      hits ++ missing.map(i => i -> got(i))
+    }
+  }
+
+  private[graft] val MetadataItems = 1024
+  private[graft] val MetadataTables = 256
+  /** Items memoized for a table set (0 if none): the unit pin's view. */
+  private[graft] def metadataItems(dirs: Seq[String]): Int =
+    metadataMemo.get(dirs).fold(0)(_._2.size)
+  private val metadataMemo = scala.collection.concurrent.TrieMap
+    .empty[Seq[String], (Seq[String], scala.collection.concurrent.TrieMap[String, Any])]
 
   /**
    * Small-input guard for CPU-heavy scan stages (shingling, hashing,

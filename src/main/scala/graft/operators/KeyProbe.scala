@@ -37,12 +37,13 @@ object KeyProbe {
     graft.CacheRegistry.track(df,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** The probe list as a 1-column single-partition DataFrame. */
+  /** The probe list as a 1-column `LocalRelation`: the keys already live
+    * on the driver, so they ride in the plan (no RDD, no job to read
+    * them back). */
   def keysDf(df: DataFrame, keyCol: String, keys: Seq[Any]): DataFrame = {
-    val spark = df.sparkSession
+    import scala.jdk.CollectionConverters._
     val keyType = df.schema(keyCol).dataType
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(keys.map(Row(_)), 1),
+    df.sparkSession.createDataFrame(keys.map(Row(_)).asJava,
       StructType(Seq(StructField(ProbeCol, keyType,
         nullable = keys.exists(_ == null)))))
   }
@@ -130,16 +131,20 @@ object KeyProbe {
     definiteMiss.unionAll(needExact)
   }
 
-  /** Membership as a boolean column joined onto the probe list itself:
-    * one row per probed key with `is_present` (duplicate probe keys stay
+  /** Membership as a boolean column over the probe list itself: one row
+    * per probed key with `is_present` (duplicate probe keys stay
     * duplicated — the reference answers per requested key). A null probe
-    * key keeps its row and reports `is_present = false` (the equi-join
-    * never matches NULL), consistent with semi/anti ignoring nulls. */
+    * key keeps its row and reports `is_present = false` (NULL IN (...) is
+    * NULL, coalesced), consistent with semi/anti ignoring nulls.
+    *
+    * `probe IN (found keys)` over the `LocalRelation` probe list plans as
+    * ONE broadcast ExistenceJoin against the [[semi]] rows — two Spark
+    * jobs (the broadcast and the result, PlanSpec-pinned); the semi side
+    * needs no `distinct`, since membership ignores duplicate matches. */
   def presence(df: DataFrame, keyCol: String, keys: Seq[Any],
                threshold: Int = InlineThreshold): DataFrame = {
-    val found = semi(df, keyCol, keys, threshold)
-      .select(col(keyCol).as(ProbeCol)).distinct().withColumn("_p", lit(true))
-    keysDf(df, keyCol, keys).join(broadcast(found), Seq(ProbeCol), "left_outer")
-      .select(col(ProbeCol).as("key"), coalesce(col("_p"), lit(false)).as("is_present"))
+    val found = semi(df, keyCol, keys, threshold).select(col(keyCol))
+    keysDf(df, keyCol, keys).select(col(ProbeCol).as("key"),
+      coalesce(col(ProbeCol).isin(found), lit(false)).as("is_present"))
   }
 }

@@ -225,33 +225,19 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$vdir/_centroids")
   }
 
-  /**
-   * Per-(version dir) memo for the frozen model tables a probe must hold
-   * as driver literals (codebooks, centroids): `_codebook`/`_centroids`
-   * are written once per `v=N` and NEVER modified inside it (appends only
-   * grow `codes/` — the frozen-codebook contract), so the collected array
-   * is immutable for the lifetime of the key and a repeated serving probe
-   * skips the ~0.1-0.2 s planning+codegen mini-action the collect costs
-   * (the BENCH_NOTES eager-collect finding, applied to the one collect
-   * that MUST stay eager because the ADC kernel needs a literal LUT).
-   * A rebuild flips the pointer to a NEW v=N+1 → a new key; bounded by a
-   * size cap so a build-heavy test session cannot hoard. Keys carry the
-   * table's [[graft.Tables.fingerprint]]: a root rebuilt OUT-OF-BAND to the
-   * same v=N path (test fixtures, a manual wipe — the CAS lifecycle never
-   * reuses a version number) is re-collected, never serving stale LUTs.
-   */
-  private val modelMemo =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-  private def memoized[T <: AnyRef](key: String)(load: => T): T = {
-    if (modelMemo.size > 256) modelMemo.clear() // crude cap; reload is cheap
-    modelMemo.getOrElseUpdate(key, load).asInstanceOf[T]
-  }
-
-  /** Bounded nlist-row collect — the codebook-collect contract class. */
+  /** Bounded nlist-row collect — the codebook-collect contract class.
+    * The frozen model tables a probe must hold as driver literals
+    * (codebooks, centroids) are written once per `v=N` and NEVER modified
+    * inside it (appends only grow `codes/` — the frozen-codebook
+    * contract), so the collect is memoized in [[graft.Tables.metadata]]:
+    * a repeated serving probe skips it, a rebuild flips the pointer to a
+    * new `v=N+1` (a new key), and a root rebuilt OUT-OF-BAND to the same
+    * `v=N` path (test fixtures, a manual wipe — the CAS lifecycle never
+    * reuses a version number) changes the listing fingerprint, so it is
+    * re-collected, never serving stale LUTs. */
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             vdir: String): Array[Array[Float]] =
-    memoized(s"centroids|$vdir|" +
-        graft.Tables.fingerprint(spark, s"$vdir/_centroids")) {
+    graft.Tables.metadata(spark, s"$vdir/_centroids", "centroids") {
       val p = s"$vdir/_centroids"
       require(new org.apache.hadoop.fs.Path(p).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -1340,8 +1326,7 @@ object Similarity {
     * within a version, a new version is a new key). */
   private def readCodebook(spark: org.apache.spark.sql.SparkSession,
                            vdir: String): Array[Array[Long]] =
-    memoized(s"codebook|$vdir|" +
-        graft.Tables.fingerprint(spark, s"$vdir/_codebook")) {
+    graft.Tables.metadata(spark, s"$vdir/_codebook", "codebook") {
       spark.read.parquet(s"$vdir/_codebook")
         .orderBy(col("c")).collect()
         .map(_.getSeq[Long](1).toArray)
@@ -1412,9 +1397,10 @@ object Similarity {
     val sd = dim / m
     // codebook subvectors as a RELATIONAL (s, c, cv) frame — the ksub-row
     // _codebook table exploded to m·ksub rows in the plan, not a driver
-    // collect: the serving probe then has NO eager construction-time
-    // action at all; the codebook read rides the luts broadcast future
-    // inside the one main job (the TermStats.dfreqFor discipline). A row
+    // collect: the batch LUTs are themselves a relation (queries ×
+    // codebook), so the codebook read rides the luts broadcast inside the
+    // batch's own jobs, where the single-query probes hold a collected
+    // codebook from the per-version memo ([[readCodebook]]). A row
     // whose width disagrees with the declared dim raises IN the plan
     // (raise_error is non-foldable, so the guard survives optimization) —
     // the loud-refusal discipline of the requireMatchingM append guard;

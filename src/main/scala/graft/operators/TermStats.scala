@@ -43,7 +43,8 @@ object TermStats {
     * non-negative idf), shared by every serving variant — one definition
     * makes the single/batch/prebuilt "identical results by construction"
     * equivalence STRUCTURAL instead of test-enforced. Expects columns
-    * tf, df, dl, and the 1-row stats (n, sdl) already joined in. */
+    * tf, df, dl, n and sdl — joined-in columns (the corpus and batch
+    * forms) or plan literals (the prebuilt single-query probe). */
   private def bm25TermScore(k1: Double, b: Double): org.apache.spark.sql.Column = {
     val avgdl = col("sdl").cast("double") / col("n").cast("double")
     val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
@@ -593,31 +594,60 @@ object TermStats {
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$vdir/terms")
 
-  /** The query-pruned df lookup as a LAZY relation: sum the dictionary
-    * partials for exactly the probe's terms (a |terms|-row read), falling
-    * back to counting the posting rows themselves on a legacy index that
-    * predates `terms/`. `tf` must already be filtered to the query's
-    * terms. Deliberately NOT an eager collect: the caller broadcasts it
-    * inside the probe's ONE action, where broadcast futures materialize
-    * concurrently — a driver-side head()/collect() here would serialize
-    * a ~0.2 s planning+codegen mini-action per probe (measured), the
-    * opposite of the job-count fix it looks like. */
-  private def dfreqFor(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       terms: Seq[String], tf: DataFrame): DataFrame =
-    if (IndexLifecycle.tableExists(spark, s"$dir/terms"))
-      graft.Tables.artifact(spark, s"$dir/terms")
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    else tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+  /** The probe-side constants of one text-index version — (N, Σdl) and
+    * each query term's df — read through [[graft.Tables.metadataEach]],
+    * keyed by the `stats/` and `terms/` listings. An append adds files to
+    * both, which changes the key, so a probe never scores against a stale
+    * version. Every miss is ONE shuffle-free collect: the stats partials
+    * and the missing terms' dictionary rows, scanned together and summed
+    * on the driver — (N, Σdl) is re-read once per version, df once per
+    * (version, term) the version has not yet served. A hit pays two
+    * `listStatus` calls instead of a Spark job. A legacy index without
+    * `terms/` counts df from its postings (an aggregate) under the same
+    * per-term memo. Every query term gets a df (0 if absent). */
+  private def indexConstants(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, terms: Seq[String]): (Long, Long, Map[String, Long]) = {
+    val dict = IndexLifecycle.tableExists(spark, s"$dir/terms")
+    val table = if (dict) s"$dir/terms" else s"$dir/postings"
+    val got = graft.Tables.metadataEach[Long](spark, Seq(s"$dir/stats", table),
+        Seq("n", "sdl") ++ terms.map("df:" + _)) { missing =>
+      val want = missing.filter(_.startsWith("df:")).map(_.drop(3))
+      val stats = graft.Tables.artifact(spark, s"$dir/stats").select(
+        lit(null).cast("string").as("term"), col("n").cast("long").as("a"),
+        coalesce(col("sdl").cast("long"), lit(0L)).as("b"))
+      val found = graft.Tables.artifact(spark, table).filter(col("term").isin(want: _*))
+      val dfs = (if (dict) found.select(col("term"), col("df").cast("long").as("a"))
+                 else found.groupBy(col("term")).agg(count(lit(1)).as("a")))
+        .withColumn("b", lit(0L))
+      val (st, rows) = (if (want.isEmpty) stats else stats.unionByName(dfs))
+        .collect().partition(_.isNullAt(0))
+      val df = rows.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+      Map("n" -> st.map(_.getLong(1)).sum, "sdl" -> st.map(_.getLong(2)).sum) ++
+        want.map(t => s"df:$t" -> df.getOrElse(t, 0L))
+    }
+    (got("n"), got("sdl"), terms.map(t => t -> got(s"df:$t")).toMap)
+  }
 
   /**
    * BM25 over a prebuilt inverted index: identical results to
    * [[bm25TopK]] by construction (same integer-scaled scoring), but the
    * query reads ONLY the postings rows of its own terms (pushed isin
-   * filter over the term-sorted layout, dl riding in the posting row) and
-   * the tiny stats partials — neither the corpus text nor the lengths
-   * table is in the plan at all (PlanSpec-pinned). The serving form:
-   * thousands of queries against one build.
+   * filter over the term-sorted layout, dl riding in the posting row) —
+   * neither the corpus text nor the lengths table is in the plan at all
+   * (PlanSpec-pinned). The serving form: thousands of queries against
+   * one build.
+   *
+   * N, Σdl and the query terms' df enter the plan as literals from
+   * [[indexConstants]]' per-version memo, so the probe is one
+   * aggregate-and-rank plan (two Spark jobs, PlanSpec-pinned) instead of
+   * one plus a broadcast sub-plan per constant; a probe that misses the
+   * memo (a new index version, or a term the version has not served)
+   * runs one more, shuffle-free job first. Only that index METADATA
+   * is memoized; the postings are re-read by every probe (no result
+   * caching). df rides as a map literal read with `element_at`:
+   * generated code holds a map literal by reference, so a new term set
+   * reuses the compiled code (per-term constants inlined into the code
+   * would recompile it for every new term set).
    */
   def bm25TopKPrebuilt(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, keyCol: String,
@@ -636,18 +666,10 @@ object TermStats {
     val tf =
       if (postings.columns.contains("dl")) tf0
       else tf0.join(graft.Tables.artifact(spark, s"$dir/lengths"), Seq(keyCol))
-    // df from the terms/ dictionary (a |query|-row pruned read) where the
-    // artifact has one — removes the second full posting-list scan the
-    // df recount used to pay per probe. stats stays a lazy 1-row
-    // broadcast: it materializes concurrently with the other broadcast
-    // futures inside the probe's one action (the dfreqFor scaladoc's
-    // eager-collect trap)
-    val dfreq = dfreqFor(spark, dir, query, tf)
-    val stats = graft.Tables.artifact(spark, s"$dir/stats")
-      .agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
+    val (n, sdl, dfs) = indexConstants(spark, dir, query.distinct)
     val termScore = bm25TermScore(k1, b)
-    tf.join(broadcast(dfreq), Seq("term"))
-      .crossJoin(broadcast(stats))
+    tf.withColumn("df", element_at(typedLit(dfs), col("term")))
+      .withColumn("n", lit(n)).withColumn("sdl", lit(sdl))
       .withColumn("_ts", round(termScore * 1e6).cast("long"))
       .groupBy(col(keyCol))
       .agg(round(sum(col("_ts")).cast("double") / 1e6, 6).as("bm25"))
@@ -710,10 +732,11 @@ object TermStats {
     val tf =
       if (postings.columns.contains("dl")) tf0
       else tf0.join(graft.Tables.artifact(spark, s"$dir/lengths"), Seq(keyCol))
-    // df from the terms/ dictionary pruned to the batch's distinct terms
-    // (the single-query form's rule, relational because the batch
-    // vocabulary is a relation); stats stays a lazy 1-row broadcast (the
-    // dfreqFor scaladoc's eager-collect trap)
+    // df from the terms/ dictionary pruned to the batch's distinct terms,
+    // and stats as a 1-row broadcast — both relational, because the batch
+    // vocabulary is itself a relation: driver literals would need an
+    // eager collect of the batch's terms per call, where the single-query
+    // form's constants come from a per-version memo ([[indexConstants]])
     val dfreq =
       if (IndexLifecycle.tableExists(spark, s"$dir/terms"))
         graft.Tables.artifact(spark, s"$dir/terms")
@@ -1089,14 +1112,19 @@ object TermStats {
    * implies a candidate phrase start `base = p - i`; the phrase occurs at
    * `base` iff ALL k slots voted for that base — `count(distinct slot) =
    * k` per (doc, base). Duplicate phrase terms are handled naturally: the
-   * slots frame carries one row per slot, so a term appearing at slots
-   * i and j votes twice per occurrence, once for each base.
+   * term→slots map lists every slot of a term, so a term appearing at
+   * slots i and j votes twice per occurrence, once for each base.
+   * `count_distinct` (not a plain count) keeps the vote exact even if a
+   * (doc, term) posting row were ever duplicated.
    *
    * Scale shape: the postings scan prunes to the phrase's own terms
    * (pushed isin over the term-sorted layout — corpus text is NOT in the
-   * plan, PlanSpec-pinned); the slots frame is k rows and broadcasts;
-   * the only shuffle moves (key, base, slot) triples for MATCHED-term
-   * occurrences only. A stop-word-heavy phrase pays proportionally to
+   * plan, PlanSpec-pinned); the slots are a k-entry map literal exploded
+   * per posting row (no join, no broadcast sub-plan); the only shuffle
+   * is ONE `repartition(keyCol)` of the MATCHED posting rows, which
+   * every aggregate above it — the distinct-slot vote per (key, base)
+   * and the per-key hit count — reuses: two Spark jobs per probe
+   * (PlanSpec-pinned). A stop-word-heavy phrase pays proportionally to
    * that term's postings length — the published mitigation (next-word
    * bigram indexing) composes on top of this artifact if needed.
    */
@@ -1104,14 +1132,14 @@ object TermStats {
                            indexPath: String, keyCol: String,
                            phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase search needs at least one term")
-    import spark.implicits._
     val dir = resolveIndexDir(spark, indexPath)
-    val slots = broadcast(
-      phrase.zipWithIndex.map { case (t, i) => (t, i.toLong) }
-        .toDF("term", "slot"))
+    val slots: Map[String, Seq[Long]] = phrase.zipWithIndex
+      .groupMap(_._1)(_._2.toLong).map { case (t, is) => t -> is.toSeq }
     graft.Tables.artifact(spark, s"$dir/postings")
       .filter(col("term").isin(phrase.distinct: _*))
-      .join(slots, Seq("term"))
+      .repartition(col(keyCol))
+      .select(col(keyCol), col("positions"),
+        explode(element_at(typedLit(slots), col("term"))).as("slot"))
       .select(col(keyCol), col("slot"),
         explode(col("positions")).as("pos"))
       .select(col(keyCol), (col("pos") - col("slot")).as("base"), col("slot"))

@@ -2299,6 +2299,15 @@ class OperatorsSpec extends SparkSpec {
     val b = Seq((3L, "d d b"), (4L, "x y a")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft-text").toString
     graft.operators.TermStats.buildTextIndex(a, "text", "doc_id", s"$dir/idx")
+    // probe A alone first: it memoizes A's N, Σdl and df, so a memo that
+    // ignored the listing fingerprint would score the A ∪ B probe below
+    // with A's statistics and break its equality with the adhoc form
+    val onlyA = graft.operators.TermStats
+      .bm25TopKPrebuilt(spark, s"$dir/idx", "doc_id", Seq("a", "d"), k = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(onlyA == graft.operators.TermStats
+      .bm25TopK(a, "text", "doc_id", Seq("a", "d"), k = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     graft.operators.TermStats.appendTextIndex(b, "text", "doc_id", s"$dir/idx")
     val pre = graft.operators.TermStats
       .bm25TopKPrebuilt(spark, s"$dir/idx", "doc_id", Seq("a", "d"), k = 10)

@@ -175,9 +175,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("hybrid prebuilt serving query touches index artifacts only") {
-    // the serving contract: BM25 side reads postings (+1-row stats), PQ
-    // side reads codes — neither the corpus text nor the raw embeddings
-    // may appear in any scan of the fused plan
+    // the serving contract: BM25 side reads postings (N, Σdl and df ride
+    // in as literals), PQ side reads codes — neither the corpus text nor
+    // the raw embeddings may appear in any scan of the fused plan
     val p = plan("q_hybrid_prebuilt")
     assert(p.contains("postings"), s"postings scan missing:\n$p")
     assert(p.contains("codes"), s"codes scan missing:\n$p")
@@ -194,7 +194,9 @@ class PlanSpec extends SparkSpec {
   test("hybrid BATCH serving query: postings + codes only; embeddings read " +
        "solely as the pushed-filter query batch") {
     // the q_hybrid_prebuilt contract batched: per-query BM25 reads
-    // postings (+1-row stats), per-query ADC reads codes; the corpus text
+    // postings (+ the terms/ and stats/ partials as relations; only the
+    // single-query probe holds n, sdl and df as plan literals), per-query
+    // ADC reads codes; the corpus text
     // never appears. The embeddings table IS legitimately in this plan —
     // as the 3-row QUERY batch — so the pin is that its scan carries the
     // pushed vec_id bound, not that it is absent.
@@ -409,10 +411,8 @@ class PlanSpec extends SparkSpec {
       "q_curriculum", // 1-row percentile-edge frame broadcast onto the scan
       "q_sketch_union", // 1-row merged-sketch x 1-row exact count
       "q_lm_score", // 1-row LM denominator + 1-row OOV floor broadcasts
-      "q_bm25", "q_bm25_batch", "q_bm25_prebuilt", // 1-row (N, Σdl) stats broadcast (the tfidf shape)
-      "q_bundle_restore", // q_bm25_prebuilt served from a restored bundle (same shape)
+      "q_bm25", "q_bm25_batch", // 1-row (N, Σdl) stats broadcast (the tfidf shape)
       "q_hybrid_rrf", // embeds the q_bm25 subplan (same 1-row stats broadcast)
-      "q_hybrid_prebuilt", // embeds the q_bm25_prebuilt subplan (same shape)
       "q_hybrid_batch", // same stats broadcast + the bounded |q|·m·ksub
         // query-LUT crossJoin (model-sized by the batch-ADC contract)
       "q_ann_recall", // bounded query-sample broadcast onto the truth scan
@@ -556,5 +556,96 @@ class PlanSpec extends SparkSpec {
     val wrapped = SparkEntry.queries("q_json_extract")(spark, sf)
       .collect().map(_.toString).sorted
     assert(wrapped.sameElements(plain))
+  }
+
+  /** Spark jobs that one serving run of `name` starts — DataFrame
+    * construction and the collect, as a serving client pays them — after
+    * one warm run (fixture builds, the per-version metadata memo). Counted
+    * with a SparkListener (the JobCountProbe method), filtered to this
+    * thread's job group; a marker job run after the query and seen by the
+    * listener proves every earlier job event has been delivered. */
+  private def servingJobs(name: String): Int = {
+    def run(): Unit = SparkEntry.queries(name)(spark, sf).collect()
+    run()
+    jobsOf(name)(run())
+  }
+
+  /** Spark jobs that `run` starts on this thread (see [[servingJobs]]). */
+  private def jobsOf(name: String)(run: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"jobcount-$name-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, name)
+      run
+      sc.setJobGroup(marker, "listener-bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.asScala.count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("prebuilt bm25 probe runs in 2 jobs: N, Σdl and df are memoized plan literals") {
+    // the aggregate's shuffle stage and the ranked result; a broadcast
+    // sub-plan per index constant would add a job each
+    val jobs = servingJobs("q_bm25_prebuilt")
+    assert(jobs <= 2, s"q_bm25_prebuilt started $jobs jobs")
+  }
+
+  test("a bm25 memo miss adds ONE job: stats and unseen terms' df in one scan") {
+    // the miss collect is a shuffle-free scan of the stats and terms/
+    // partials, ahead of the 2-job probe; an aggregate per constant would
+    // add a shuffle stage (a job) each
+    import graft.operators.TermStats
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("graft_bm25miss_").toString
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"), (3L, "gamma delta"))
+      .toDF("doc_id", "text")
+    TermStats.buildTextIndex(docs, "text", "doc_id", idx)
+    def probe(terms: Seq[String]): Unit =
+      TermStats.bm25TopKPrebuilt(spark, idx, "doc_id", terms, k = 5).collect()
+    probe(Seq("beta"))
+    val dfMiss = jobsOf("bm25-df-miss")(probe(Seq("beta", "delta")))
+    assert(dfMiss <= 3, s"a df-only miss started $dfMiss jobs")
+    // after an append both listings change, so (N, Σdl) and df all miss;
+    // the artifact relations are re-read first, outside the count (their
+    // parquet schema read is a job of its own, paid with or without the memo)
+    TermStats.appendTextIndex(Seq((4L, "delta epsilon")).toDF("doc_id", "text"),
+      "text", "doc_id", idx)
+    val dir = TermStats.resolveIndexDir(spark, idx)
+    Seq("postings", "stats", "terms").foreach(t => Tables.artifact(spark, s"$dir/$t"))
+    val fullMiss = jobsOf("bm25-full-miss")(probe(Seq("beta", "delta")))
+    assert(fullMiss <= 3, s"a miss after an append started $fullMiss jobs")
+    val hit = jobsOf("bm25-hit")(probe(Seq("beta", "delta")))
+    assert(hit <= 2, s"a memo hit started $hit jobs")
+  }
+
+  test("prebuilt phrase probe runs in 2 jobs: literal slots, one key exchange") {
+    // the key exchange and the result; an exchange per aggregate or a
+    // broadcast slots join would add jobs
+    val jobs = servingJobs("q_phrase_prebuilt")
+    assert(jobs <= 2, s"q_phrase_prebuilt started $jobs jobs")
+  }
+
+  test("key presence runs in 2 jobs: one broadcast existence join") {
+    // the broadcast of the found keys and the result over the local
+    // probe list
+    val jobs = servingJobs("q_keys_exist")
+    assert(jobs <= 2, s"q_keys_exist started $jobs jobs")
+    assert(plan("q_keys_exist").contains("ExistenceJoin"),
+      s"presence is not an existence join:\n${plan("q_keys_exist")}")
   }
 }

@@ -90,4 +90,65 @@ class SessionCacheSpec extends SparkSpec {
       .select("key_a", "key_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 3L)), s"expected (1,3) in $pairs")
   }
+
+  test("Tables.artifact: a file swapped for a same-size, same-mtime file " +
+       "under a hash-colliding name is re-read, not served stale") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    // "Aa" and "BB" share a String.hashCode, so a 32-bit hash of the
+    // listing cannot tell "Aa.parquet:<len>:<mtime>" from "BB.parquet:..."
+    assert("Aa".hashCode == "BB".hashCode)
+    val root = Files.createTempDirectory("graft_fpcollide_")
+    val dir = Files.createDirectory(root.resolve("art"))
+    def parquetOf(v: Long): Path = {
+      val out = root.resolve(s"w$v").toString
+      Seq(v).toDF("v").coalesce(1).write.option("compression", "none").parquet(out)
+      Files.list(Path.of(out)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+    }
+    val (a, b) = (parquetOf(1L), parquetOf(2L))
+    assert(Files.size(a) == Files.size(b), "the swap needs equal file lengths")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def place(src: Path, name: String): Unit = {
+      val dst = dir.resolve(name)
+      Files.move(src, dst)
+      fs.setTimes(new org.apache.hadoop.fs.Path(dst.toString), 1600000000000L, -1L)
+    }
+    place(a, "Aa.parquet")
+    assert(Tables.artifact(spark, dir.toString).as[Long].collect().toSeq == Seq(1L))
+    Files.delete(dir.resolve("Aa.parquet"))
+    place(b, "BB.parquet")
+    assert(Tables.artifact(spark, dir.toString).as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("Tables.metadata: one value per (tables, listing, item), reloaded " +
+       "after the listing changes; an item overflow clears only its own tables") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_metamemo_")
+    Files.write(dir.resolve("f0"), Array[Byte](0))
+    var loads = 0
+    def get(): Int = Tables.metadata(spark, dir.toString, "x") { loads += 1; loads }
+    assert(get() == 1 && get() == 1, "a repeated read must hit the memo")
+    Files.write(dir.resolve("f1"), Array[Byte](1)) // an "append"
+    assert(get() == 2 && get() == 2, "a changed listing must reload")
+    // per-item misses load together, hits are not reloaded
+    val terms = Seq(dir.toString, Files.createTempDirectory("graft_metaterms_").toString)
+    var asked = Seq.empty[String]
+    def each(items: Seq[String]) = Tables.metadataEach[Int](spark, terms, items) { ms =>
+      asked = ms; ms.map(_ -> ms.size).toMap
+    }
+    assert(each(Seq("p", "q")) == Map("p" -> 2, "q" -> 2) && asked == Seq("p", "q"))
+    assert(each(Seq("q", "r")) == Map("q" -> 2, "r" -> 1) && asked == Seq("r"))
+    // a wide vocabulary: MetadataItems + 1 single-item misses, then one
+    // oversized load, stay within the cap and evict nothing of `dir`'s
+    // own table set (a codebook or centroid table in serving)
+    (0 to Tables.MetadataItems).foreach(i => each(Seq(s"i$i")))
+    assert(Tables.metadataItems(terms) <= Tables.MetadataItems)
+    each((0 to Tables.MetadataItems).map(i => s"j$i"))
+    assert(Tables.metadataItems(terms) <= Tables.MetadataItems)
+    assert(get() == 2 && loads == 2, "an item overflow evicted another table's value")
+    // the old listing's entry is replaced, not kept beside the new one
+    Files.write(dir.resolve("f2"), Array[Byte](2))
+    assert(get() == 3 && Tables.metadataItems(Seq(dir.toString)) == 1)
+  }
 }
