@@ -39,10 +39,21 @@ object Bench {
     // the driver invokes with no args and gets the full suite
     val wanted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => args.isEmpty || args.contains(n) }
+    // classes compiled, and compile nanoseconds, during each query's second
+    // (warm) run: queries run one at a time, so the JVM-wide counters are
+    // the query's own. A warm query that still compiles has literals in its
+    // generated source or a working set over the class cache.
+    val compiles = scala.collection.mutable.Map.empty[String, (Long, Long)]
     val suiteResults = wanted.map { case (name, fn) =>
       val sec =
-        try math.min(timeOnce(fn), timeOnce(fn))
-        catch { case _: Throwable => -1.0 }
+        try {
+          val first = timeOnce(fn)
+          val before = EngineSession.codegenCounters()
+          val second = timeOnce(fn)
+          val after = EngineSession.codegenCounters()
+          compiles(name) = (after._1 - before._1, after._2 - before._2)
+          math.min(first, second)
+        } catch { case _: Throwable => -1.0 }
       // release engine-held caches between queries: leftover signature
       // tables from earlier dedup queries otherwise squeeze the block
       // manager and GC, showing up as 3-5x run-order spikes on UNRELATED
@@ -148,9 +159,17 @@ object Bench {
       val commonDuck = common.map(_._3).sum
       // meta entries share the list with the per-query entries so one
       // mkString handles separators (an empty suite still emits valid JSON)
+      val warmCompiles = compiles.toSeq.sortBy(_._1)
       val entries = results.sortBy(_._1).map { case (k, v) =>
         JsonUtil.str(k) + ": " + fmt(v)
-      } ++ (if (duck.isEmpty) Seq.empty else Seq(
+      } ++ Seq(
+        "\"_codegen_compiles\": " + warmCompiles
+          .map { case (k, (n, _)) => JsonUtil.str(k) + ": " + n }
+          .mkString("{", ", ", "}"),
+        "\"_codegen_compile_ms\": " + warmCompiles
+          .map { case (k, (_, ns)) => JsonUtil.str(k) + ": " + fmt(ns / 1e6, 1) }
+          .mkString("{", ", ", "}")
+      ) ++ (if (duck.isEmpty) Seq.empty else Seq(
         "\"_duckdb_sec\": " + duck.toSeq.sortBy(_._1)
           .map { case (k, v) => JsonUtil.str(k) + ": " + fmt(v, 4) }
           .mkString("{", ", ", "}"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 
-import graft.functions.{DotProduct, DotProductConst, GobDecode, GobEncode, MsgPackDecode, MsgPackEncode, NormalizeText, RollingGramHashExpr, TokensContainPhrase}
+import graft.functions.{BindLiterals, DotProduct, DotProductConst, GobDecode, GobEncode, MsgPackDecode, MsgPackEncode, NormalizeText, RollingGramHashExpr, TokensContainPhrase}
 
 /**
  * SQL surface for the engine's custom expressions, registered through the
@@ -14,8 +14,14 @@ import graft.functions.{DotProduct, DotProductConst, GobDecode, GobEncode, MsgPa
  * `spark.sql("... WHERE graft_phrase(toks, 'a', 'b')")` parses, analyzes,
  * and codegens like any built-in. The DataFrame API does not need this —
  * the typed wrappers in graft.functions build the expressions directly —
- * but a SQL-first user of the engine gets the same operators. Functions
- * are all it injects: no optimizer rule runs in an engine session.
+ * but a SQL-first user of the engine gets the same operators.
+ *
+ * Besides the functions it injects one physical rule, [[BindLiterals]],
+ * through `injectColumnar`: primitive literals in filters, projections and
+ * hash aggregates are read by reference from the generated code, so a
+ * query shape compiles once whatever its key values (README, "Compiling
+ * each generated class once"). No optimizer rule runs in an engine
+ * session.
  *
  * Functions:
  *  - `graft_phrase(tokens, w1, w2, ...)` — consecutive-token phrase match
@@ -36,6 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectColumnar(_ => BindLiterals.columnarRule)
   }
 }
 

@@ -36,10 +36,19 @@ object IndexLifecycle {
 
   /** [[currentVersion]] generalized over the pointer file name — the
     * snapshot family uses `_latest`; [[graft.operators.Bundles]] round
-    * trips both families through this one reader. */
+    * trips both families through this one reader.
+    *
+    * The pointer is read past Hadoop's checksum layer: on the local file
+    * system the flip's rename moves the file and its `.crc` sidecar one
+    * after the other, so a reader in between paired new bytes with the
+    * old checksum and threw `ChecksumException`. The content needs no
+    * checksum: it is validated as a version number below. */
   def currentVersionAt(spark: SparkSession, root: String,
                        pointerName: String): Option[Long] = {
-    val f = fs(spark, root)
+    val f = fs(spark, root) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     val p = new org.apache.hadoop.fs.Path(s"$root/$pointerName")
     if (!f.exists(p)) None
     else {

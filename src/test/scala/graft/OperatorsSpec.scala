@@ -585,6 +585,24 @@ class OperatorsSpec extends SparkSpec {
     assert(e.getMessage.contains(s"$dir/_latest") && e.getMessage.contains("v1?"), e.getMessage)
   }
 
+  test("a pointer read tolerates a stale checksum: a flip renames the " +
+       ".crc sidecar apart from the pointer") {
+    val root = java.nio.file.Files.createTempDirectory("graft_crcptr").toString + "/idx"
+    IndexLifecycle.flipPointer(spark, root, 1L)
+    assert(IndexLifecycle.currentVersion(spark, root).contains(1L))
+    // the window a concurrent reader can land in: the next version's bytes
+    // beside the previous flip's checksum (written past the checksum
+    // layer, so `._current.crc` still describes "1")
+    val local = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem]
+    val out = local.getRawFileSystem.create(
+      new org.apache.hadoop.fs.Path(s"$root/_current"), true)
+    try out.write("2".getBytes("UTF-8")) finally out.close()
+    assert(new java.io.File(root, "._current.crc").exists)
+    assert(IndexLifecycle.currentVersion(spark, root).contains(2L))
+  }
+
   test("lock names are validated; sweepDebris removes only lapsed tombs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_locks2").toString
     // names that would alias tomb/temp files or walk the path are refused
