@@ -62,4 +62,37 @@ object EngineSession {
     * class cache, which reads its size from the active session. */
   def codegenCounters(): (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** Runs `body` and counts the Spark jobs it started on this thread:
+    * a `SparkListener` counts job starts tagged with a fresh job group set
+    * around `body` (broadcasts and subqueries inherit it). A marker job run
+    * afterwards under a second group, once the listener has seen it, proves
+    * every earlier job event has been delivered. The marker runs after
+    * `body` returns, so a timer inside `body` does not see it. */
+  def countJobs[T](spark: SparkSession, label: String)(body: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"jobcount-$label-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      val out = body
+      sc.setJobGroup(marker, "listener-bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      require(seen.contains(marker), "the listener never saw the marker job")
+      (out, seen.asScala.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Buckets
 
 /**
  * Multi-dimensional file layout: write a table Z-ORDERED on several
@@ -20,20 +21,14 @@ import org.apache.spark.sql.functions._
  * Scale shape: per column one `approxQuantile` pass computes the bucket
  * edges (distributed sketch, driver gets 255 doubles — NO global sort,
  * no single-task window); bucket assignment is then a pure per-row
- * expression, and the only data movement is the final range repartition
- * on the z-value. Quantile (not uniform-width) edges make the layout
+ * expression (a binary search over the edges, [[Buckets.bucketIndex]]),
+ * and the only data movement is the final range repartition on the
+ * z-value. Quantile (not uniform-width) edges make the layout
  * skew-resistant: a hot value range still spreads over its rank share.
  */
 object Layout {
 
   private val Bits = 8 // 256 quantile buckets per dimension
-
-  /** Bucket index of `v` given ascending quantile edges: the count of
-    * edges <= v, as one flat per-row expression (255 adds — scan-stage
-    * arithmetic, no join, no shuffle). NULLs land in bucket 0. */
-  private def bucketExpr(v: Column, edges: Array[Double]): Column =
-    edges.map(e => when(v >= lit(e), 1).otherwise(0))
-      .reduce(_ + _).cast("long")
 
   /** The interleaved z-value: bit j of dimension i lands at position
     * j * dims + i. Buckets are LongType — with int columns a shift
@@ -74,7 +69,7 @@ object Layout {
           "numeric (castable to double) with at least one non-null value")
     }
     val bucketed = edges.foldLeft(df) { case (acc, (c, es)) =>
-      acc.withColumn(s"_b_$c", bucketExpr(col(c).cast("double"), es))
+      acc.withColumn(s"_b_$c", Buckets.bucketIndex(col(c).cast("double"), es))
     }
     bucketed
       .withColumn("_z", interleave(cols.map(c => col(s"_b_$c"))))

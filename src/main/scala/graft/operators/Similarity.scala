@@ -1159,7 +1159,16 @@ object Similarity {
     * LUT[s][c] = dot(query_sub_s, codebook[c]_sub_s) in exact int64; the
     * final score divides by scale² and round(6)s BEFORE ranking. The scan
     * touches ONLY the m-int codes column — the original vectors are never
-    * read (the whole point at 100 TB). */
+    * read (the whole point at 100 TB).
+    *
+    * Plan cost: the LUT is ONE array literal (`typedLit`), not m·ksub
+    * `lit`s in an `array(...)` call (128 expression nodes at the defaults,
+    * each analyzed on every `Dataset` step), and generated code holds it by
+    * reference, so a new query vector compiles nothing (CodegenCacheSpec).
+    * The checked codes, the score and the output key come out of one
+    * `select`: every `Dataset` step re-analyzes the whole plan. The ranked
+    * limit is a `TakeOrderedAndProject`, one partition out, so
+    * [[TermStats.rrfFuse]] ranks it without an exchange. */
   def pqAdcTopK(codesDf: DataFrame, codesCol: String, keyCol: String,
                 outKey: String, query: Array[Float], k: Int,
                 codebook: Array[Array[Long]], m: Int, dim: Int,
@@ -1175,11 +1184,6 @@ object Similarity {
       while (j < sd) { acc += qi(s * sd + j) * codebook(c)(s * sd + j); j += 1 }
       acc
     }
-    val lutLit = array(lut.map(lit(_)): _*)
-    val scoreInt = aggregate(
-      zip_with(col(codesCol), sequence(lit(0), lit(m - 1)),
-        (c, s) => element_at(lutLit, s * ksub + c + 1)),
-      lit(0L), (acc, v) => acc + v)
     // requireMatchingM's loud-refusal discipline, probe-side: a code row
     // whose length disagrees with the declared m would null-pad through
     // zip_with, null-poison the LUT sum, and return k ARBITRARY rows
@@ -1189,13 +1193,15 @@ object Similarity {
         lit("code row width "), size(col(codesCol)).cast("string"),
         lit(s" does not match the declared m=$m — wrong (m, dim) for " +
           "this index"))))
+    val scoreInt = aggregate(
+      zip_with(codesChecked, sequence(lit(0), lit(m - 1)),
+        (c, s) => element_at(typedLit(lut), s * ksub + c + 1)),
+      lit(0L), (acc, v) => acc + v)
     codesDf
-      .withColumn(codesCol, codesChecked)
-      .withColumn("score",
-        round(scoreInt.cast("double") / lit(scale * scale), 6))
-      .orderBy(col("score").desc, col(keyCol).asc)
+      .select(col(keyCol).as(outKey),
+        round(scoreInt.cast("double") / lit(scale * scale), 6).as("score"))
+      .orderBy(col("score").desc, col(outKey).asc)
       .limit(k)
-      .select(col(keyCol).as(outKey), col("score"))
   }
 
   /** In-query PQ top-k: sample codebook (bounded ksub-row collect), encode

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 
@@ -42,12 +42,16 @@ object TermStats {
   /** The BM25 per-(term, doc) score expression (k1/b, Lucene-style
     * non-negative idf), shared by every serving variant — one definition
     * makes the single/batch/prebuilt "identical results by construction"
-    * equivalence STRUCTURAL instead of test-enforced. Expects columns
-    * tf, df, dl, n and sdl — joined-in columns (the corpus and batch
-    * forms) or plan literals (the prebuilt single-query probe). */
-  private def bm25TermScore(k1: Double, b: Double): org.apache.spark.sql.Column = {
-    val avgdl = col("sdl").cast("double") / col("n").cast("double")
-    val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
+    * equivalence STRUCTURAL instead of test-enforced. Reads columns tf and
+    * dl; `df`, `n` and `sdl` are passed in: joined-in columns (`col(...)`,
+    * the corpus and batch forms) or, for N and Σdl, plan literals (the
+    * prebuilt single-query probe, which so needs no `Dataset` step to add
+    * them). Every form passes them as longs, so the arithmetic, and with
+    * it every score, is the same expression tree in each. */
+  private def bm25TermScore(df: Column, n: Column, sdl: Column,
+                            k1: Double, b: Double): Column = {
+    val avgdl = sdl.cast("double") / n.cast("double")
+    val idf = log(lit(1.0) + (n - df + 0.5) / (df + 0.5))
     idf * (col("tf") * (k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / avgdl))
   }
@@ -434,7 +438,7 @@ object TermStats {
       .groupBy(col(keyCol), col("term"))
       .agg(count(lit(1)).as("tf"), min(col("dl")).as("dl"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val termScore = bm25TermScore(k1, b)
+    val termScore = bm25TermScore(col("df"), col("n"), col("sdl"), k1, b)
     tf.join(broadcast(dfreq), Seq("term"))
       .crossJoin(broadcast(stats))
       .withColumn("_ts", round(termScore * 1e6).cast("long"))
@@ -488,7 +492,7 @@ object TermStats {
       .groupBy(col(keyCol), col("term"))
       .agg(count(lit(1)).as("tf"), min(col("dl")).as("dl"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val termScore = bm25TermScore(k1, b)
+    val termScore = bm25TermScore(col("df"), col("n"), col("sdl"), k1, b)
     val perDoc = qterms
       .join(tf, Seq("term"))
       .join(broadcast(dfreq), Seq("term"))
@@ -517,27 +521,30 @@ object TermStats {
    * right plan for thousands of rows and would be wrong for billions (at
    * that point the inputs were not rankings). The fusion join is
    * candidate-list-sized on both sides.
+   *
+   * Jobs: a ranked limit (`TakeOrderedAndProject`) already delivers one
+   * partition, so over two of them the rank windows and the full-outer
+   * join plan no exchange. Fusing [[bm25TopKPrebuilt]] under its
+   * single-partition bound with [[Similarity.pqTopKPrebuilt]] is one
+   * Spark job (PlanSpec-pinned). Each side ranks in one `select`, and
+   * the fused score is computed in the projection that renames the key:
+   * every `Dataset` step re-analyzes the whole plan, both sides included.
    */
   def rrfFuse(a: DataFrame, aKey: String, aScore: String,
               b: DataFrame, bKey: String, bScore: String,
               k: Int, k0: Int = 60): DataFrame = {
     require(k0 >= 1, "rank constant k0 must be >= 1")
-    def ranked(df: DataFrame, keyC: String, scoreC: String, out: String) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col(scoreC).desc, col("_key").asc)
-      df.select(col(keyC).as("_key"), col(scoreC))
-        .withColumn(out, row_number().over(w))
-        .select(col("_key"), col(out))
-    }
-    val ra = ranked(a, aKey, aScore, "_ra")
-    val rb = ranked(b, bKey, bScore, "_rb")
-    ra.join(rb, Seq("_key"), "full_outer")
-      .withColumn("rrf", round(
+    def ranked(df: DataFrame, keyC: String, scoreC: String, out: String) =
+      df.select(col(keyC).as("_key"), row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .orderBy(col(scoreC).desc, col(keyC).asc)).as(out))
+    ranked(a, aKey, aScore, "_ra").join(ranked(b, bKey, bScore, "_rb"),
+        Seq("_key"), "full_outer")
+      .select(col("_key").as(aKey), round(
         coalesce(lit(1.0) / (lit(k0) + col("_ra")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(k0) + col("_rb")), lit(0.0)), 6))
-      .orderBy(col("rrf").desc, col("_key").asc)
+        coalesce(lit(1.0) / (lit(k0) + col("_rb")), lit(0.0)), 6).as("rrf"))
+      .orderBy(col("rrf").desc, col(aKey).asc)
       .limit(k)
-      .select(col("_key").as(aKey), col("rrf"))
   }
 
   /**
@@ -628,6 +635,20 @@ object TermStats {
     (got("n"), got("sdl"), terms.map(t => t -> got(s"df:$t")).toMap)
   }
 
+  /** The most matched posting rows — Σdf over a probe's distinct terms,
+    * which counts exactly the rows its `isin` filter passes — that
+    * [[bm25TopKPrebuilt]] aggregates in one partition. At or below it the
+    * aggregate and the ranked limit find `SinglePartition` and plan no
+    * exchange, so the probe is one Spark job. The exchange it saves is a
+    * query stage of its own, 47–100 ms of hand-off measured at up to
+    * 200,000 rows (BENCH_NOTES, 4-core VM). The price is parallelism: one
+    * task scans and aggregates every matched row, about 2 µs a row there
+    * (about 200 ms at this bound), and holds at most that many
+    * (key, partial sum) entries, a few MB. The bound keeps that work
+    * within a few hand-offs; above it the probe keeps the exchange, and
+    * the scan of a many-split index and the aggregate stay parallel. */
+  val SinglePartitionPostings = 100000L
+
   /**
    * BM25 over a prebuilt inverted index: identical results to
    * [[bm25TopK]] by construction (same integer-scaled scoring), but the
@@ -638,16 +659,31 @@ object TermStats {
    * one build.
    *
    * N, Σdl and the query terms' df enter the plan as literals from
-   * [[indexConstants]]' per-version memo, so the probe is one
-   * aggregate-and-rank plan (two Spark jobs, PlanSpec-pinned) instead of
-   * one plus a broadcast sub-plan per constant; a probe that misses the
-   * memo (a new index version, or a term the version has not served)
-   * runs one more, shuffle-free job first. Only that index METADATA
-   * is memoized; the postings are re-read by every probe (no result
-   * caching). df rides as a map literal read with `element_at`:
-   * generated code holds a map literal by reference, so a new term set
-   * reuses the compiled code (per-term constants inlined into the code
-   * would recompile it for every new term set).
+   * [[indexConstants]]' per-version memo, so no broadcast sub-plan rides
+   * the probe; a probe that misses the memo (a new index version, or a
+   * term the version has not served) runs one more, shuffle-free job
+   * first. Only that index METADATA is memoized; the postings are re-read
+   * by every probe (no result caching).
+   *
+   * Jobs (PlanSpec-pinned): the memoized df also counts the rows the probe
+   * will aggregate. At most [[SinglePartitionPostings]] of them are
+   * coalesced into the scan's one partition, so the aggregate and the
+   * ranked limit plan no exchange and a memo hit is ONE Spark job; above
+   * the bound the aggregate keeps its exchange (two jobs). Scores are
+   * integer-scaled sums, which do not depend on the partitioning.
+   *
+   * Few `Dataset` steps: each one re-analyzes the whole plan, so the
+   * score is one aggregate expression with N and Σdl as literals, over
+   * ONE projection that adds df. df rides as a map literal read with
+   * `element_at`: generated code holds a map literal by reference, so a
+   * new term set reuses the compiled code (per-term constants inlined
+   * into the code would recompile it for every new term set). The lookup
+   * is projected before the aggregate, not inlined into it: the score
+   * reads df twice, and inside the aggregate the lookup became a common
+   * subexpression of the same height as `cast(tf as double)`. Codegen
+   * orders such ties by expression hash, which follows the map's
+   * contents, so about one term set in ten generated reordered source and
+   * compiled a new class (CodegenCacheSpec).
    */
   def bm25TopKPrebuilt(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, keyCol: String,
@@ -667,12 +703,12 @@ object TermStats {
       if (postings.columns.contains("dl")) tf0
       else tf0.join(graft.Tables.artifact(spark, s"$dir/lengths"), Seq(keyCol))
     val (n, sdl, dfs) = indexConstants(spark, dir, query.distinct)
-    val termScore = bm25TermScore(k1, b)
-    tf.withColumn("df", element_at(typedLit(dfs), col("term")))
-      .withColumn("n", lit(n)).withColumn("sdl", lit(sdl))
-      .withColumn("_ts", round(termScore * 1e6).cast("long"))
+    val termScore = bm25TermScore(col("df"), lit(n), lit(sdl), k1, b)
+    (if (dfs.values.sum <= SinglePartitionPostings) tf.coalesce(1) else tf)
+      .withColumn("df", element_at(typedLit(dfs), col("term")))
       .groupBy(col(keyCol))
-      .agg(round(sum(col("_ts")).cast("double") / 1e6, 6).as("bm25"))
+      .agg(round(sum(round(termScore * 1e6).cast("long")).cast("double") / 1e6, 6)
+        .as("bm25"))
       .orderBy(col("bm25").desc, col(keyCol).asc)
       .limit(k)
   }
@@ -745,7 +781,7 @@ object TermStats {
       else tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = graft.Tables.artifact(spark, s"$dir/stats")
       .agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
-    val termScore = bm25TermScore(k1, b)
+    val termScore = bm25TermScore(col("df"), col("n"), col("sdl"), k1, b)
     qterms.join(tf, Seq("term"))
       .join(broadcast(dfreq), Seq("term"))
       .crossJoin(broadcast(stats))

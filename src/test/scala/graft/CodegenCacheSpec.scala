@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.filters.{Cmp, CmpOp, FieldRef}
-import graft.operators.{Existence, IndexRead}
+import graft.operators.{Existence, IndexRead, Similarity, TermStats}
 
 /**
  * Each generated class compiles once per JVM: the engine session sizes
@@ -90,6 +90,47 @@ class CodegenCacheSpec extends SparkSpec {
     val k = custkeys(3)
     val plan = filterReq(k).queryExecution.executedPlan.toString
     assert(plan.contains(s"PushedFilters: [IsNotNull(o_custkey), EqualTo(o_custkey,$k)]"), plan)
+  }
+
+  test("ann_pq, bm25 and hybrid probes with new query vectors and term sets " +
+       "compile nothing after the first of each shape; bm25 matches bm25TopK") {
+    val textIdx = Fixtures.textIndexPath(spark, sf)
+    val pqIdx = Fixtures.pqIndexPath(spark, sf)
+    val vecs = Tables(spark, sf, "embeddings").filter(col("vec_id") < 21)
+      .orderBy("vec_id").select("embedding").collect().map(_.getSeq[Float](0).toArray).toSeq
+    // 11 two-term and 11 three-term sets of the 12 terms in the most documents
+    val pool = spark.read.parquet(s"${TermStats.resolveIndexDir(spark, textIdx)}/terms")
+      .groupBy("term").agg(sum("df").as("df")).orderBy(col("df").desc, col("term"))
+      .limit(12).collect().map(_.getString(0)).toSeq
+    val (two, three) = (pool.combinations(2).take(11).toSeq, pool.combinations(3).take(11).toSeq)
+    assert(vecs.size == 21 && two.size == 11 && three.size == 11, s"vocabulary $pool")
+    // one probe over the whole pool fills the per-version df memo first:
+    // a memo miss runs its own collect (PlanSpec counts it), and this test
+    // counts what a steady-state probe compiles
+    TermStats.bm25TopKPrebuilt(spark, textIdx, "doc_id", pool, k = 20).collect()
+
+    def bm25(t: Seq[String]): DataFrame =
+      TermStats.bm25TopKPrebuilt(spark, textIdx, "doc_id", t, k = 20)
+    def pq(v: Array[Float]): DataFrame =
+      Similarity.pqTopKPrebuilt(spark, pqIdx, "vec_id", v, 20)
+    def hybrid(t: Seq[String], v: Array[Float]): DataFrame =
+      TermStats.rrfFuse(bm25(t), "doc_id", "bm25", pq(v), "vec_id", "score", k = 20)
+    val got = scala.collection.mutable.Map.empty[Seq[String], Seq[Row]]
+    for ((kind, requests) <- Seq(
+        "ann_pq" -> vecs.map(v => () => pq(v).collect()),
+        "bm25 (2 terms)" -> two.map(t => () => got(t) = bm25(t).collect().toSeq),
+        "bm25 (3 terms)" -> three.map(t => () => got(t) = bm25(t).collect().toSeq),
+        "hybrid (2 terms)" -> two.zip(vecs).map { case (t, v) => () => hybrid(t, v).collect() },
+        "hybrid (3 terms)" -> three.zip(vecs.drop(10)).map { case (t, v) => () => hybrid(t, v).collect() })) {
+      requests.head()
+      val n = compiledBy(requests.tail.foreach(_()))
+      assert(n == 0, s"$kind: ${requests.size - 1} probes with new values compiled $n classes")
+    }
+    val docs = Tables(spark, sf, "documents")
+    (two ++ three).foreach { t =>
+      assert(got(t) == TermStats.bm25TopK(docs, "text", "doc_id", t, k = 20).collect().toSeq,
+        s"bm25 $t")
+    }
   }
 
   test("the class cache holds 150 distinct classes: the engine session sizes it") {

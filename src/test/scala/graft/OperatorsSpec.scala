@@ -2977,6 +2977,67 @@ class OperatorsSpec extends SparkSpec {
       "single-dim sort should NOT prune the second dimension")
   }
 
+  /** The ERROR lines Spark's code generator logs while `body` runs
+    * ("Failed to compile the generated Java code ..."). */
+  private def codegenErrorsDuring(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("codegen-errors", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.ERROR))
+          seen.add(e.getMessage.getFormattedMessage.take(300))
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try body finally { logger.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("bucketIndex assigns the when-sum's bucket: NULL, NaN, ±0.0, values " +
+       "equal to an edge, below and above every edge; codegen and interpreted") {
+    import graft.functions.Buckets
+    // unsorted on purpose, and both zeros and NaN as edges: approxQuantile
+    // edges through distinct() can hold -0.0 and 0.0 apart
+    val edges = Array(2.0, -5.0, 0.0, -0.0, 1.5, 1e9, Double.NaN)
+    val values: Seq[java.lang.Double] = null +: Seq(Double.NaN, Double.NegativeInfinity,
+      -1e12, -5.0, -4.9, -0.0, 0.0, 1e-300, 1.5, 1.75, 2.0, 2.5, 1e9, 1e12,
+      Double.PositiveInfinity).map(Double.box)
+    // an RDD-backed frame: a projection over a local relation would be
+    // evaluated by the optimizer, never by generated code
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(values.map(org.apache.spark.sql.Row(_)), 2),
+      StructType(Seq(StructField("v", DoubleType, nullable = true))))
+    val whenSum = edges.map(e => when(col("v") >= lit(e), 1).otherwise(0))
+      .reduce(_ + _).cast("long")
+    def buckets(): Seq[(String, Long, Long)] =
+      df.select(col("v").cast("string"), whenSum, Buckets.bucketIndex(col("v"), edges))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val compiled = buckets()
+    val interpreted = {
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      val old = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), "false"); spark.conf.set(keys(1), "NO_CODEGEN")
+      try buckets() finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    for ((path, rows) <- Seq("codegen" -> compiled, "interpreted" -> interpreted)) {
+      assert(rows.size == values.size)
+      rows.foreach { case (v, want, got) =>
+        assert(got == want, s"$path: v=$v bucket $got, when-sum $want")
+      }
+    }
+    // the ends: NULL is bucket 0, NaN counts every edge (NaN sorts last)
+    assert(compiled.collect { case (null, w, _) => w } == Seq(0L))
+    assert(compiled.collect { case ("NaN", w, _) => w } == Seq(edges.length.toLong))
+  }
+
   test("zorderWrite: 8 dimensions fill bit 63 without sign-inverting or wrapping") {
     // 8 dims x 8 bits puts the last dimension's top bit at position 63 —
     // the Long sign bit. 256 files resolve exactly the top bit of every
@@ -2991,7 +3052,10 @@ class OperatorsSpec extends SparkSpec {
       acc.withColumn(s"d$i", (col("id") * p) % n) // bijective, decorrelated
     }
     val cols = primes.indices.map(i => s"d$i")
-    Layout.zorderWrite(df, cols, s"$dir/z8", 256)
+    // the 8 bucket columns stay one compiled stage: no Janino failure
+    // (a method past the JVM's 64 KB limit) and no interpreted fallback
+    val compileErrors = codegenErrorsDuring(Layout.zorderWrite(df, cols, s"$dir/z8", 256))
+    assert(compileErrors.isEmpty, compileErrors.mkString("\n"))
     val z = spark.read.parquet(s"$dir/z8")
     cols.foreach { c =>
       val span = Layout.fileSpans(z, c).agg(avg("rel_span")).head().getDouble(0)

@@ -561,9 +561,7 @@ class PlanSpec extends SparkSpec {
   /** Spark jobs that one serving run of `name` starts — DataFrame
     * construction and the collect, as a serving client pays them — after
     * one warm run (fixture builds, the per-version metadata memo). Counted
-    * with a SparkListener (the JobCountProbe method), filtered to this
-    * thread's job group; a marker job run after the query and seen by the
-    * listener proves every earlier job event has been delivered. */
+    * with [[EngineSession.countJobs]], filtered to this thread's job group. */
   private def servingJobs(name: String): Int = {
     def run(): Unit = SparkEntry.queries(name)(spark, sf).collect()
     run()
@@ -571,43 +569,74 @@ class PlanSpec extends SparkSpec {
   }
 
   /** Spark jobs that `run` starts on this thread (see [[servingJobs]]). */
-  private def jobsOf(name: String)(run: => Unit): Int = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"jobcount-$name-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
+  private def jobsOf(name: String)(run: => Unit): Int =
+    EngineSession.countJobs(spark, name)(run)._2
+
+  test("serve-shaped queries start no more jobs than they did") {
+    // each serving path's count when the bm25 and hybrid probes went to one
+    // job; a change that adds a job to any of them fails here and must
+    // say why in the pin
+    val census = Seq("q_filter_eq" -> 1, "q_index_keyset" -> 1, "q_keys_exist" -> 2,
+      "q_ann_ivf_prebuilt" -> 1, "q_ann_pq_prebuilt" -> 1, "q_phrase_prebuilt" -> 2)
+    val over = census.flatMap { case (q, pin) =>
+      val n = servingJobs(q)
+      if (n > pin) Some(s"$q started $n jobs, pinned at $pin") else None
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, name)
-      run
-      sc.setJobGroup(marker, "listener-bus marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.asScala.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 
-  test("prebuilt bm25 probe runs in 2 jobs: N, Σdl and df are memoized plan literals") {
-    // the aggregate's shuffle stage and the ranked result; a broadcast
-    // sub-plan per index constant would add a job each
+  test("prebuilt bm25 probe runs in 1 job: memoized literals, one-partition aggregate") {
+    // N, Σdl and df ride as literals (no broadcast sub-plan), and the
+    // fixture's Σdf is under the bound, so the aggregate and the ranked
+    // limit find one partition and plan no exchange
     val jobs = servingJobs("q_bm25_prebuilt")
-    assert(jobs <= 2, s"q_bm25_prebuilt started $jobs jobs")
+    assert(jobs <= 1, s"q_bm25_prebuilt started $jobs jobs")
+    val p = plan("q_bm25_prebuilt")
+    assert(!p.contains("Exchange"), s"bounded bm25 probe plans an exchange:\n$p")
+  }
+
+  test("prebuilt hybrid probe runs in 1 job: both ranked sides arrive in one " +
+       "partition, so ranks and the fusion join plan no exchange") {
+    val jobs = servingJobs("q_hybrid_prebuilt")
+    assert(jobs <= 1, s"q_hybrid_prebuilt started $jobs jobs")
+    val p = plan("q_hybrid_prebuilt")
+    assert(!p.contains("Exchange"), s"hybrid probe plans an exchange:\n$p")
+  }
+
+  test("a bm25 probe over more postings than the bound keeps its exchange; " +
+       "both sides of the bound equal bm25TopK") {
+    import graft.operators.TermStats
+    import org.apache.spark.sql.functions._
+    val idx = java.nio.file.Files.createTempDirectory("graft_bm25bound_").toString
+    // every doc holds alpha and beta (Σdf = 2n, over the bound); gamma and
+    // delta are rarer (Σdf under it); tf and dl vary so scores spread
+    val n = TermStats.SinglePartitionPostings * 3 / 5
+    val docs = spark.range(n).select(col("id").as("doc_id"), concat_ws(" ",
+      when(col("id") % 3 === 0, "alpha alpha").otherwise("alpha"), lit("beta"),
+      when(col("id") % 5 === 0, "gamma"), when(col("id") % 7 === 0, "delta delta"),
+      when(col("id") % 4 === 0, "pad pad pad").otherwise("pad")).as("text"))
+    TermStats.buildTextIndex(docs, "text", "doc_id", idx)
+    val k = 50
+    for ((terms, bounded) <- Seq(Seq("alpha", "beta") -> false,
+                                 Seq("gamma", "delta") -> true)) {
+      val sumDf = docs.select(explode(array_distinct(split(col("text"), " "))).as("t"))
+        .filter(col("t").isin(terms: _*)).count()
+      assert((sumDf <= TermStats.SinglePartitionPostings) == bounded,
+        s"$terms: Σdf $sumDf is on the wrong side of the bound")
+      val probe = TermStats.bm25TopKPrebuilt(spark, idx, "doc_id", terms, k = k)
+      probe.collect() // fills the metadata memo, as a served probe finds it
+      val p = TermStats.bm25TopKPrebuilt(spark, idx, "doc_id", terms, k = k)
+        .queryExecution.executedPlan.toString
+      assert(p.contains("Exchange") != bounded,
+        s"$terms (Σdf $sumDf): exchange planned = ${p.contains("Exchange")}:\n$p")
+      val want = TermStats.bm25TopK(docs, "text", "doc_id", terms, k = k).collect().toSeq
+      assert(probe.collect().toSeq == want, s"$terms: prebuilt probe != bm25TopK")
+    }
   }
 
   test("a bm25 memo miss adds ONE job: stats and unseen terms' df in one scan") {
     // the miss collect is a shuffle-free scan of the stats and terms/
-    // partials, ahead of the 2-job probe; an aggregate per constant would
+    // partials, ahead of the 1-job probe; an aggregate per constant would
     // add a shuffle stage (a job) each
     import graft.operators.TermStats
     import spark.implicits._
@@ -619,7 +648,7 @@ class PlanSpec extends SparkSpec {
       TermStats.bm25TopKPrebuilt(spark, idx, "doc_id", terms, k = 5).collect()
     probe(Seq("beta"))
     val dfMiss = jobsOf("bm25-df-miss")(probe(Seq("beta", "delta")))
-    assert(dfMiss <= 3, s"a df-only miss started $dfMiss jobs")
+    assert(dfMiss <= 2, s"a df-only miss started $dfMiss jobs")
     // after an append both listings change, so (N, Σdl) and df all miss;
     // the artifact relations are re-read first, outside the count (their
     // parquet schema read is a job of its own, paid with or without the memo)
@@ -628,9 +657,9 @@ class PlanSpec extends SparkSpec {
     val dir = TermStats.resolveIndexDir(spark, idx)
     Seq("postings", "stats", "terms").foreach(t => Tables.artifact(spark, s"$dir/$t"))
     val fullMiss = jobsOf("bm25-full-miss")(probe(Seq("beta", "delta")))
-    assert(fullMiss <= 3, s"a miss after an append started $fullMiss jobs")
+    assert(fullMiss <= 2, s"a miss after an append started $fullMiss jobs")
     val hit = jobsOf("bm25-hit")(probe(Seq("beta", "delta")))
-    assert(hit <= 2, s"a memo hit started $hit jobs")
+    assert(hit <= 1, s"a memo hit started $hit jobs")
   }
 
   test("prebuilt phrase probe runs in 2 jobs: literal slots, one key exchange") {
