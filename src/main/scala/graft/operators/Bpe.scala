@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TokenDict
+
 /**
- * Distributed BPE vocabulary induction — the tokenizer-training half of a
+ * BPE vocabulary induction — the tokenizer-training half of a
  * training-data pipeline (the engine already ships the APPLY half:
  * `TermStats.encodeTokens` / `TextFunctions` token estimates). No reference
  * analogue; the algorithm is the published byte-pair-encoding procedure
@@ -13,10 +15,22 @@ import org.apache.spark.sql.functions._
  *
  * THE scale property (the classic BPE trick, kept intact here): after ONE
  * corpus pass builds the word-frequency table, every training iteration
- * runs on the WORD VOCABULARY — corpus text is never touched again. At
- * 100 TB the corpus pass is a map-side-combined (word) count; iterations
- * then cost one vocabulary-bounded (t1, t2) aggregation each plus a
- * one-row argmax to the driver.
+ * runs on the WORD VOCABULARY — corpus text is never touched again. The
+ * table is collected in one action, at most [[DriverWords]] + 1 rows of
+ * it, and the path follows its size:
+ *
+ *  - up to [[DriverWords]] words, the merge loop runs on the DRIVER, as
+ *    the usual tokenizer trainers do: pair counts are kept incrementally,
+ *    so a merge touches only the words that contain its pair, and no
+ *    merge costs a Spark job. The trained dictionary then reaches the
+ *    corpus inside one codegen'd lookup expression ([[TokenDict]]);
+ *  - above it (a 100 TB corpus's vocabulary can outgrow driver memory)
+ *    the loop is DISTRIBUTED: each batch of merges costs one
+ *    vocabulary-bounded (t1, t2) aggregation plus a top-K collect, and
+ *    the dictionary broadcasts into the corpus scan.
+ *
+ * Both paths learn the same merges and segment every word the same way
+ * (BpeSpec-pinned; a bound of 0 forces the distributed path).
  *
  * Cross-engine determinism: pair counts are integer sums of integer word
  * frequencies (order-independent); the winning pair breaks ties on
@@ -43,12 +57,32 @@ object Bpe {
   /** One learned merge: the pair and its count at selection time. */
   final case class Merge(t1: String, t2: String, count: Long)
 
-  /** (word, f, repr) working table: repr = ` c1  c2 … cn ` per the
-    * boundary encoding above. */
-  private def initRepr(docs: DataFrame, textCol: String): DataFrame =
+  /** The largest word vocabulary that trains on the driver; a larger one
+    * trains distributed. At this bound a 30,000-merge training peaks at
+    * about 150 MB of driver heap for the word table, the pair counts, the
+    * pair → words index and the ranked pairs (BENCH_NOTES). */
+  val DriverWords = 100000
+
+  /** The (w, f) word-frequency table: the one corpus pass. */
+  private def wordCounts(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(split(col(textCol), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("f"))
+
+  /** At most `bound` + 1 rows of the word-frequency table, in one action:
+    * all of it when it fits the bound, and proof that it does not when
+    * `bound` + 1 rows come back. */
+  private[graft] def collectWords(docs: DataFrame, textCol: String,
+                                  bound: Int): Array[(String, Long)] = {
+    require(bound >= 0 && bound < Int.MaxValue, "word bound in [0, Int.MaxValue)")
+    wordCounts(docs, textCol).limit(bound + 1).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+  }
+
+  /** (word, f, repr) working table: repr = ` c1  c2 … cn ` per the
+    * boundary encoding above. */
+  private def initRepr(docs: DataFrame, textCol: String): DataFrame =
+    wordCounts(docs, textCol)
       .withColumn("_s", concat(lit(" "), regexp_replace(col("w"), "(.)", "$1  ")))
       .withColumn("repr", expr("substring(_s, 1, length(_s) - 1)"))
       .drop("_s")
@@ -70,8 +104,13 @@ object Bpe {
    * list and the final token vocabulary with frequencies — both the
    * artifacts a tokenizer build consumes.
    *
+   * A vocabulary of at most `driverWords` words trains on the driver (the
+   * scale property above): one Spark action collects the word table and
+   * the vocabulary returned is a local relation. A larger one trains
+   * distributed, as follows.
+   *
    * BATCHED selection (the job-count fix for real tokenizer builds —
-   * 30k merges must not be 30k Spark actions): each corpus action
+   * 30k merges must not be 30k Spark actions): each vocabulary action
    * collects the top `batchSize` pairs and accepts a PREFIX of them that
    * is provably what sequential selection would pick, by two rules over
    * the collected list alone:
@@ -101,23 +140,150 @@ object Bpe {
    */
   def train(docs: DataFrame, textCol: String,
             merges: Int, checkpointEvery: Int = 16,
-            batchSize: Int = 16): (Seq[Merge], DataFrame) = {
-    val (learned, repr) = trainCore(docs, textCol, merges, checkpointEvery, batchSize)
-    val vocab = repr
-      .select(col("f"), explode(split(trim(col("repr")), "  ")).as("token"))
-      .groupBy("token").agg(sum(col("f")).as("freq"))
+            batchSize: Int = 16,
+            driverWords: Int = DriverWords): (Seq[Merge], DataFrame) = {
+    val (learned, segmented) =
+      trainCore(docs, textCol, merges, checkpointEvery, batchSize, driverWords)
+    val vocab = segmented match {
+      case Left(t) =>
+        val freq = scala.collection.mutable.HashMap.empty[String, Long]
+        for (i <- t.tokens.indices; tok <- t.tokens(i))
+          freq(tok) = freq.getOrElse(tok, 0L) + t.words(i)._2
+        docs.sparkSession.createDataFrame(freq.toSeq).toDF("token", "freq")
+      case Right(repr) => repr
+        .select(col("f"), explode(split(trim(col("repr")), "  ")).as("token"))
+        .groupBy("token").agg(sum(col("f")).as("freq"))
+    }
     (learned, vocab)
   }
 
-  /** The train loop proper, returning the final WORKING TABLE (w, f, repr)
-    * alongside the merges — [[train]] derives the token vocabulary from it,
-    * [[trainEncode]] reuses it as the word→tokens dictionary. */
+  /** A driver-trained segmentation: word `words(i)._1`, seen
+    * `words(i)._2` times, segments as `tokens(i)`. */
+  private final case class DriverTable(words: Array[(String, Long)],
+                                       tokens: Array[Array[String]])
+
+  /** The job description of the vocabulary collect and of the driver loop. */
+  val DriverLabel = "bpe/train driver"
+  /** The job description of the distributed loop's actions. */
+  val DistributedLabel = "bpe/train distributed"
+
+  /** The train loop proper: collects the word table once and, when it
+    * fits `driverWords`, merges on the driver; otherwise it runs the
+    * distributed loop and returns its final WORKING TABLE (w, f, repr).
+    * [[train]] derives the token vocabulary from either, [[trainEncode]]
+    * uses either as the word→tokens dictionary. The collect runs under
+    * the job description [[DriverLabel]] and the distributed loop's
+    * actions under [[DistributedLabel]], so a job list shows which path a
+    * training took; the caller's description is restored on return. */
   private def trainCore(docs: DataFrame, textCol: String,
-                        merges: Int, checkpointEvery: Int,
-                        batchSize: Int): (Seq[Merge], DataFrame) = {
+                        merges: Int, checkpointEvery: Int, batchSize: Int,
+                        driverWords: Int): (Seq[Merge], Either[DriverTable, DataFrame]) = {
     require(merges >= 0, "non-negative merge count")
     require(checkpointEvery >= 1, "positive checkpoint interval")
     require(batchSize >= 1, "positive selection batch size")
+    val sc = docs.sparkSession.sparkContext
+    val callerLabel = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription(DriverLabel)
+      val words = collectWords(docs, textCol, driverWords)
+      if (words.length <= driverWords) {
+        val (learned, tokens) = mergeOnDriver(words, merges)
+        (learned, Left(DriverTable(words, tokens)))
+      } else {
+        sc.setJobDescription(DistributedLabel)
+        val (learned, repr) = mergeDistributed(docs, textCol, merges, checkpointEvery, batchSize)
+        (learned, Right(repr))
+      }
+    } finally sc.setJobDescription(callerLabel)
+  }
+
+  /** Pairs in selection order: count DESC, t1 ASC, t2 ASC — the
+    * distributed loop's `orderBy`, since `[a-z]+` tokens compare the same
+    * as strings and as bytes. */
+  private val selectionOrder: java.util.Comparator[Merge] = (x, y) =>
+    if (x.count != y.count) java.lang.Long.compare(y.count, x.count)
+    else { val c = x.t1.compareTo(y.t1); if (c != 0) c else x.t2.compareTo(y.t2) }
+
+  /** `ts` with every (a, b) adjacency merged into `ab`, greedy left to
+    * right: the token form of the boundary-encoded `replace`. */
+  private def applyMerge(ts: Array[Int], a: Int, b: Int, ab: Int): Array[Int] = {
+    val out = Array.newBuilder[Int]
+    var i = 0
+    while (i < ts.length) {
+      if (i + 1 < ts.length && ts(i) == a && ts(i + 1) == b) { out += ab; i += 2 }
+      else { out += ts(i); i += 1 }
+    }
+    out.result()
+  }
+
+  /** Sequential BPE over a collected word table, on the driver. Tokens are
+    * ids and a pair is one Long key, (t1 id, t2 id). Pair counts are kept
+    * incrementally: a merge re-counts only the words that hold its pair
+    * (their old pairs out, their new pairs in), and a tree set keeps the
+    * pairs in selection order. Returns the merges and each word's final
+    * tokens. */
+  private def mergeOnDriver(words: Array[(String, Long)],
+                            merges: Int): (Seq[Merge], Array[Array[String]]) = {
+    import scala.collection.mutable
+    val names = mutable.ArrayBuffer.empty[String]
+    val ids = mutable.HashMap.empty[String, Int]
+    def id(t: String): Int = ids.getOrElseUpdate(t, { names += t; names.length - 1 })
+    // t1's id in the high half, t2's in the low half XOR t1's scrambled:
+    // LongMap hashes high ^ low, which puts every pair with the same
+    // a ^ b in one probe chain unless the halves are mixed
+    def key(a: Int, b: Int): Long = (a.toLong << 32) | ((b ^ (a * 0x9E3779B9)) & 0xFFFFFFFFL)
+    def merge(p: Long, cnt: Long) = {
+      val a = (p >>> 32).toInt
+      Merge(names(a), names(p.toInt ^ (a * 0x9E3779B9)), cnt)
+    }
+    def pairs(ts: Array[Int]): Iterator[Long] =
+      Iterator.range(1, ts.length).map(j => key(ts(j - 1), ts(j)))
+
+    val tokens = words.map(_._1.toCharArray.map(c => id(c.toString)))
+    val counts = mutable.LongMap.empty[Long]
+    val holders = mutable.LongMap.empty[mutable.Set[Int]] // indices of the words
+    for (i <- tokens.indices; p <- pairs(tokens(i))) {
+      counts(p) = counts.getOrElse(p, 0L) + words(i)._2
+      holders.getOrElseUpdate(p, mutable.Set.empty) += i
+    }
+    val ranked = new java.util.TreeSet[Merge](selectionOrder)
+    counts.foreachEntry((p, cnt) => ranked.add(merge(p, cnt)))
+    val learned = mutable.ArrayBuffer.empty[Merge]
+    while (learned.size < merges && !ranked.isEmpty) {
+      val m = ranked.first()
+      learned += m
+      val (a, b, ab) = (ids(m.t1), ids(m.t2), id(m.t1 + m.t2))
+      val before = mutable.LongMap.empty[Long] // each touched pair's old count
+      def shift(p: Long, by: Long): Unit = {
+        val cnt = counts.getOrElse(p, 0L)
+        before.getOrElseUpdate(p, cnt)
+        counts(p) = cnt + by
+      }
+      for (i <- holders(key(a, b)).toArray) {
+        val f = words(i)._2
+        pairs(tokens(i)).foreach { p => shift(p, -f); holders(p) -= i }
+        tokens(i) = applyMerge(tokens(i), a, b, ab)
+        pairs(tokens(i)).foreach { p =>
+          shift(p, f); holders.getOrElseUpdate(p, mutable.Set.empty) += i
+        }
+      }
+      before.foreachEntry { (p, old) =>
+        val cnt = counts(p)
+        if (cnt != old) {
+          if (old > 0) ranked.remove(merge(p, old))
+          if (cnt > 0) ranked.add(merge(p, cnt))
+        }
+        if (cnt == 0) { counts -= p; holders -= p }
+      }
+    }
+    (learned.toSeq, tokens.map(_.map(names)))
+  }
+
+  /** The batched distributed loop over the (w, f, repr) working table
+    * (see [[train]]); returns the merges and the final working table. */
+  private def mergeDistributed(docs: DataFrame, textCol: String, merges: Int,
+                               checkpointEvery: Int,
+                               batchSize: Int): (Seq[Merge], DataFrame) = {
     // iterations re-read the working table; vocabulary-bounded cache
     var repr = graft.CacheRegistry.track(initRepr(docs, textCol))
     val learned = Seq.newBuilder[Merge]
@@ -194,20 +360,28 @@ object Bpe {
 
   /**
    * Train `merges` merges and tokenize the SAME corpus with them, reusing
-   * the trained working table as the word→tokens dictionary — result-
+   * the trained segmentation as the word→tokens dictionary — result-
    * identical to `applyMerges(docs, …, train(docs, …)._1)` (BpeSpec-pinned)
    * because apply ≡ train segmentation by construction over the exact same
    * `[a-z]+` word set, but one corpus explode+distinct shuffle and one
    * vocabulary-sized merge replay cheaper (guide §2.4: the apply half's
-   * word table re-derived what training already materialized).
+   * word table re-derived what training already materialized). A
+   * driver-trained dictionary rides in one codegen'd lookup expression
+   * ([[TokenDict]]), so the encode plans no join and no broadcast; a
+   * distributed one broadcasts as in [[applyMerges]].
    */
   def trainEncode(docs: DataFrame, textCol: String, keyCol: String,
                   merges: Int, checkpointEvery: Int = 16,
-                  batchSize: Int = 16): DataFrame = {
-    val (_, repr) = trainCore(docs, textCol, merges, checkpointEvery, batchSize)
-    encodeWithDict(docs, textCol, keyCol,
-      repr.select(col("w"), split(trim(col("repr")), "  ").as("toks")))
-  }
+                  batchSize: Int = 16, driverWords: Int = DriverWords): DataFrame =
+    trainCore(docs, textCol, merges, checkpointEvery, batchSize, driverWords)._2 match {
+      case Left(t) =>
+        val dict = new TokenDict(t.words.map(_._1), t.tokens)
+        docs.select(col(keyCol), posexplode(split(col(textCol), " ")).as(Seq("pos", "w")))
+          .select(col(keyCol), col("pos"),
+            posexplode(TokenDict.lookup(col("w"), dict)).as(Seq("subpos", "token")))
+      case Right(repr) => encodeWithDict(docs, textCol, keyCol,
+        repr.select(col("w"), split(trim(col("repr")), "  ").as("toks")))
+    }
 
   /**
    * Tokenize a corpus with learned merges — the APPLY half. The merge

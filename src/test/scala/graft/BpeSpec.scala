@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Bpe
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BPE vocabulary induction: merge selection, greedy left-to-right
@@ -95,7 +96,7 @@ class BpeSpec extends SparkSpec {
     def trainCounted(group: String, batchSize: Int) = {
       graft.CacheRegistry.releaseAll()
       spark.sparkContext.setJobGroup(group, group)
-      val r = try Bpe.train(d, "text", many, batchSize = batchSize)
+      val r = try Bpe.train(d, "text", many, batchSize = batchSize, driverWords = 0)
       finally spark.sparkContext.clearJobGroup()
       (r, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
     }
@@ -112,8 +113,8 @@ class BpeSpec extends SparkSpec {
 
   test("bpe: lineage-cut interval does not change results (regime equivalence)") {
     val d = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val (mA, vA) = Bpe.train(d, "text", 5, checkpointEvery = 2)
-    val (mB, vB) = Bpe.train(d, "text", 5, checkpointEvery = 100)
+    val (mA, vA) = Bpe.train(d, "text", 5, checkpointEvery = 2, driverWords = 0)
+    val (mB, vB) = Bpe.train(d, "text", 5, checkpointEvery = 100, driverWords = 0)
     assert(mA == mB)
     val a = vA.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val b = vB.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -171,5 +172,123 @@ class BpeSpec extends SparkSpec {
     val fast = Bpe.trainEncode(real, "text", "doc_id", 4)
       .collect().map(_.toString).sorted.toSeq
     assert(fast == slow)
+  }
+
+  /** The job descriptions of the Spark jobs `body` starts on this thread,
+    * in start order, and the description in force when `body` returns. */
+  private def jobLabels[T](body: => T): (T, Seq[String], String) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"bpe-labels-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((j.properties.getProperty("spark.jobGroup.id"),
+          j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      val out = body
+      val after = sc.getLocalProperty("spark.job.description")
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._1 == s"$group-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      (out, seen.asScala.filter(_._1 == group).map(_._2).toSeq, after)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Trains `d` (doc_id, text) on the driver and distributed, asserts that
+    * the two agree on merges, vocabulary and encoding, and returns the
+    * merges, the vocabulary and the encoding. */
+  private def bothPaths(d: DataFrame, merges: Int,
+                        clue: String): (Seq[Bpe.Merge], Seq[String], Seq[String]) = {
+    val (dm, dv) = Bpe.train(d, "text", merges)
+    val (xm, xv) = Bpe.train(d, "text", merges, driverWords = 0)
+    assert(dm == xm, s"$clue: merges differ")
+    val vocab = rows(dv)
+    assert(vocab == rows(xv), s"$clue: vocabularies differ")
+    val enc = rows(Bpe.trainEncode(d, "text", "doc_id", merges))
+    assert(enc == rows(Bpe.trainEncode(d, "text", "doc_id", merges, driverWords = 0)),
+      s"$clue: encodings differ")
+    graft.CacheRegistry.releaseAll()
+    (dm, vocab, enc)
+  }
+
+  test("bpe: the driver path and the distributed path learn the same merges, " +
+       "vocabulary and encoding") {
+    import spark.implicits._
+    // two words tying at count 2, each merging down to one token; NULL and
+    // empty text, a doubled space, and out-of-scope tokens
+    val edge = Seq[(Long, String)]((1L, "ab cd Foo x1"), (2L, null), (3L, ""),
+      (4L, "cd  ab")).toDF("doc_id", "text")
+    val (none, noneVocab, noneEnc) = bothPaths(edge, 0, "merges = 0")
+    assert(none.isEmpty)
+    assert(noneVocab == Seq("[a,2]", "[b,2]", "[c,2]", "[d,2]"))
+    val (ms, vocab, enc) = bothPaths(edge, 10, "more merges than exist")
+    assert(ms == Seq(Bpe.Merge("a", "b", 2), Bpe.Merge("c", "d", 2)))
+    assert(vocab == Seq("[ab,2]", "[cd,2]"))
+    assert(enc == Seq("[1,0,0,ab]", "[1,1,0,cd]", "[1,2,0,Foo]", "[1,3,0,x1]",
+      "[3,0,0,]", "[4,0,0,cd]", "[4,1,0,]", "[4,2,0,ab]"))
+    assert(noneEnc.contains("[1,0,1,b]") && noneEnc.contains("[1,2,0,Foo]"))
+    // a word that merges down to one token while others stay split
+    val (oneMs, oneVocab, _) = bothPaths(
+      Seq((1L, "abc abc abd")).toDF("doc_id", "text"), 2, "one token")
+    assert(oneMs == Seq(Bpe.Merge("a", "b", 3), Bpe.Merge("ab", "c", 2)))
+    assert(oneVocab == Seq("[ab,1]", "[abc,2]", "[d,1]"))
+    // generated corpora: small alphabets make equal-count ties and shared
+    // letters common; out-of-scope tokens ride along
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      def word(): String = rnd.nextInt(12) match {
+        case 0 => "Foo"
+        case 1 => s"x${rnd.nextInt(9)}"
+        case _ => Seq.fill(rnd.nextInt(6) + 1)(('a' + rnd.nextInt(2 + seed)).toChar).mkString
+      }
+      val d = (1L to 40L).map(k => (k, Seq.fill(rnd.nextInt(8))(word()).mkString(" ")))
+        .toDF("doc_id", "text")
+      val (gm, _, _) = bothPaths(d, 12, s"seed $seed")
+      assert(gm.nonEmpty)
+    }
+  }
+
+  test("bpe: the word collect and the loop run under job descriptions that " +
+       "name the path; the caller's description is restored") {
+    val d = docs("aaa aaa abab Z9")
+    val ((dm, _), driverJobs, afterDriver) = jobLabels(Bpe.train(d, "text", 2))
+    assert(driverJobs.nonEmpty && driverJobs.forall(_ == Bpe.DriverLabel), driverJobs)
+    assert(afterDriver == "caller")
+    val ((xm, _), distJobs, afterDist) = jobLabels(Bpe.train(d, "text", 2, driverWords = 0))
+    assert(dm == xm)
+    // the collect runs as the driver path's, then the loop as distributed
+    val (collect, loop) = distJobs.span(_ == Bpe.DriverLabel)
+    assert(collect.nonEmpty && loop.nonEmpty &&
+      loop.forall(_ == Bpe.DistributedLabel), distJobs)
+    assert(afterDist == "caller")
+    graft.CacheRegistry.releaseAll()
+  }
+
+  test("bpe: a vocabulary of DriverWords + 1 words trains distributed; the " +
+       "driver collects at most bound + 1 rows") {
+    val bound = Bpe.DriverWords
+    // bound + 1 distinct four-letter words, one per document
+    val letter = (k: Long) => expr(s"char(97 + pmod(floor(id / $k), 26))")
+    val d = spark.range(bound + 1L)
+      .select(concat(letter(1), letter(26), letter(676), letter(17576)).as("text"))
+    assert(Bpe.collectWords(d, "text", bound).length == bound + 1)
+    assert(Bpe.collectWords(d, "text", 10).length == 11)
+    val ((ms, vocab), labels, _) = jobLabels(Bpe.train(d, "text", 2))
+    assert(labels.contains(Bpe.DistributedLabel), labels)
+    val (driverMs, driverVocab) = Bpe.train(d, "text", 2, driverWords = bound + 1)
+    assert(ms == driverMs)
+    assert(rows(vocab) == rows(driverVocab))
+    graft.CacheRegistry.releaseAll()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.filters.{Cmp, CmpOp, FieldRef}
-import graft.operators.{Existence, IndexRead, Similarity, TermStats}
+import graft.operators.{Bpe, Existence, IndexRead, Similarity, TermStats}
 
 /**
  * Each generated class compiles once per JVM: the engine session sizes
@@ -36,6 +36,21 @@ class CodegenCacheSpec extends SparkSpec {
     val first = compiledBy(pass())
     val second = compiledBy(pass())
     assert(second == 0, s"second pass recompiled $second classes (first pass: $first)")
+  }
+
+  test("trainEncode over a second corpus, with another dictionary, compiles nothing") {
+    // the dictionary rides in the lookup expression's references, so its
+    // words and tokens are not in the generated source
+    def encode(dir: String, merges: Int): Set[String] = {
+      val out = Bpe.trainEncode(Tables(spark, dir, "documents"), "text", "doc_id", merges)
+      try out.select("token").distinct().collect().map(_.getString(0)).toSet
+      finally CacheRegistry.releaseAll()
+    }
+    val first = encode(sf, 4)
+    var second = Set.empty[String]
+    val n = compiledBy { second = encode("/root/testdata/sf0.01", 7) }
+    assert(second != first, "the second dictionary segments like the first")
+    assert(n == 0, s"a second corpus and dictionary compiled $n classes")
   }
 
   test("filters, keyset pages and key probes with new values compile " +

@@ -585,6 +585,30 @@ class PlanSpec extends SparkSpec {
     assert(over.isEmpty, over.mkString("; "))
   }
 
+  test("bpe stages start no more jobs than their pins; the encode plans no join") {
+    // each stage as the pipeline runs it, with nothing cached from the warm
+    // run. Trained by the distributed loop, each started 10 jobs; on the
+    // driver, one collect of the word table (2 jobs: the AQE map stage and
+    // the result) is the training, plus the encode's own job
+    def stageJobs(name: String): Int = {
+      def run(): Unit = SparkEntry.queries(name)(spark, sf).collect()
+      run()
+      CacheRegistry.releaseAll()
+      try jobsOf(name)(run()) finally CacheRegistry.releaseAll()
+    }
+    val census = Seq("q_bpe_encode" -> 3, "q_bpe_train" -> 2)
+    val over = census.flatMap { case (q, pin) =>
+      val n = stageJobs(q)
+      if (n > pin) Some(s"$q started $n jobs, pinned at $pin") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+    // the driver-trained dictionary rides in the lookup expression
+    val p = plan("q_bpe_encode")
+    CacheRegistry.releaseAll()
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      s"driver-path encode plans a join or a broadcast:\n$p")
+  }
+
   test("prebuilt bm25 probe runs in 1 job: memoized literals, one-partition aggregate") {
     // N, Σdl and df ride as literals (no broadcast sub-plan), and the
     // fixture's Σdf is under the bound, so the aggregate and the ranked
