@@ -117,15 +117,16 @@ private[graft] object Fixtures {
 
   /** An APPEND-MAINTAINED PQ index: built on the vec_id >= 100 half
     * (codebook frozen from that subset), then extended with the vec_id <
-    * 100 half via [[operators.Similarity.appendPqIndex]] — the daily-crawl
+    * 100 half via [[operators.Similarity.appendPqIndexOnce]] — the daily-crawl
     * maintenance path exercised end to end, probed by q_ann_pq_append
     * against an oracle that freezes the codebook the same way. */
   val pqAppendIndexPath = Fixture.dir("graft_pqa_", "index") { (s, d, path) =>
     val emb = Tables(s, d, "embeddings")
     Similarity.pqBuild(emb.filter(col("vec_id") >= 100),
       "embedding", "vec_id", path, m = 8, ksub = 16, dim = 64)
-    Similarity.appendPqIndex(emb.filter(col("vec_id") < 100),
-      "embedding", "vec_id", path, m = 8, dim = 64)
+    Similarity.appendPqIndexOnce(emb.filter(col("vec_id") < 100),
+      "embedding", "vec_id", path, runId = "fixture", batchId = 0, m = 8,
+      dim = 64)
   }
 
   /** The prebuilt substring-dedup gram index over the "existing corpus"

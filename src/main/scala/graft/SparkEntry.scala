@@ -711,10 +711,11 @@ object SparkEntry {
     Q("q_ann_pq_append", // the vector-index MAINTENANCE path: build on
       // vec_id >= 100 (codebook frozen from that subset's (md5, key)
       // draw), append vec_id < 100 with the frozen codebook
-      // (appendPqIndex — one append-mode write, the corpus is never
-      // re-encoded), probe the grown index. The oracle freezes its
-      // codebook CTE the same way but encodes the whole corpus, so the
-      // row proves append == rebuild-with-the-frozen-codebook exactly.
+      // (appendPqIndexOnce — the batch's codes move into the live
+      // version, the corpus is never re-encoded), probe the grown index.
+      // The oracle freezes its codebook CTE the same way but encodes the
+      // whole corpus, so the row proves append ==
+      // rebuild-with-the-frozen-codebook exactly.
       (s, d) => Similarity.pqTopKPrebuilt(s, pqAppendIndexPath(s, d),
         "vec_id", queryVec(s, d), 20),
       Some(sqlPqAppend)),
@@ -1810,7 +1811,7 @@ object SparkEntry {
     * the codebook is FROZEN at build time — sampled from the build half
     * (vec_id >= 100) only — while codes cover build + appended rows, i.e.
     * the whole corpus. Append == rebuild-with-the-frozen-codebook is thus
-    * checked end to end: if appendPqIndex re-sampled, double-encoded, or
+    * checked end to end: if appendPqIndexOnce re-sampled, double-encoded, or
     * dropped rows, the ranking would not match this replay. */
   private lazy val sqlPqAppend: String =
     s"""WITH ${sqlPqCtesFrom("WHERE vec_id >= 100")}

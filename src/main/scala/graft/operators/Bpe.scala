@@ -63,26 +63,30 @@ object Bpe {
     * pair → words index and the ranked pairs (BENCH_NOTES). */
   val DriverWords = 100000
 
-  /** The (w, f) word-frequency table: the one corpus pass. */
-  private def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("w"))
-      .filter(col("w").rlike("^[a-z]+$"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
+  /** The (w, f) word-frequency table: the one corpus pass. The
+    * aggregation runs HERE (adaptive execution runs its map stage when
+    * the frame is re-rooted on its output rows), so the bounded collect
+    * and the distributed loop both read that output: the corpus is
+    * aggregated once, whichever path the training takes. */
+  private[graft] def wordCounts(docs: DataFrame, textCol: String): DataFrame =
+    org.apache.spark.sql.GraftBridge.dropLineageAndStats(
+      docs.select(explode(split(col(textCol), " ")).as("w"))
+        .filter(col("w").rlike("^[a-z]+$"))
+        .groupBy("w").agg(count(lit(1)).as("f")))
 
-  /** At most `bound` + 1 rows of the word-frequency table, in one action:
+  /** At most `bound` + 1 rows of a [[wordCounts]] table, in one action:
     * all of it when it fits the bound, and proof that it does not when
     * `bound` + 1 rows come back. */
-  private[graft] def collectWords(docs: DataFrame, textCol: String,
+  private[graft] def collectWords(words: DataFrame,
                                   bound: Int): Array[(String, Long)] = {
     require(bound >= 0 && bound < Int.MaxValue, "word bound in [0, Int.MaxValue)")
-    wordCounts(docs, textCol).limit(bound + 1).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    words.limit(bound + 1).collect().map(r => (r.getString(0), r.getLong(1)))
   }
 
-  /** (word, f, repr) working table: repr = ` c1  c2 … cn ` per the
-    * boundary encoding above. */
-  private def initRepr(docs: DataFrame, textCol: String): DataFrame =
-    wordCounts(docs, textCol)
+  /** (word, f, repr) working table over a [[wordCounts]] table: repr =
+    * ` c1  c2 … cn ` per the boundary encoding above. */
+  private def initRepr(words: DataFrame): DataFrame =
+    words
       .withColumn("_s", concat(lit(" "), regexp_replace(col("w"), "(.)", "$1  ")))
       .withColumn("repr", expr("substring(_s, 1, length(_s) - 1)"))
       .drop("_s")
@@ -185,13 +189,14 @@ object Bpe {
     val callerLabel = sc.getLocalProperty("spark.job.description")
     try {
       sc.setJobDescription(DriverLabel)
-      val words = collectWords(docs, textCol, driverWords)
+      val table = wordCounts(docs, textCol)
+      val words = collectWords(table, driverWords)
       if (words.length <= driverWords) {
         val (learned, tokens) = mergeOnDriver(words, merges)
         (learned, Left(DriverTable(words, tokens)))
       } else {
         sc.setJobDescription(DistributedLabel)
-        val (learned, repr) = mergeDistributed(docs, textCol, merges, checkpointEvery, batchSize)
+        val (learned, repr) = mergeDistributed(table, merges, checkpointEvery, batchSize)
         (learned, Right(repr))
       }
     } finally sc.setJobDescription(callerLabel)
@@ -280,12 +285,13 @@ object Bpe {
   }
 
   /** The batched distributed loop over the (w, f, repr) working table
-    * (see [[train]]); returns the merges and the final working table. */
-  private def mergeDistributed(docs: DataFrame, textCol: String, merges: Int,
+    * built from a [[wordCounts]] table (see [[train]]); returns the merges
+    * and the final working table. */
+  private def mergeDistributed(words: DataFrame, merges: Int,
                                checkpointEvery: Int,
                                batchSize: Int): (Seq[Merge], DataFrame) = {
     // iterations re-read the working table; vocabulary-bounded cache
-    var repr = graft.CacheRegistry.track(initRepr(docs, textCol))
+    var repr = graft.CacheRegistry.track(initRepr(words))
     val learned = Seq.newBuilder[Merge]
     var step = 0
     var exhausted = false

@@ -172,24 +172,12 @@ object Dedup {
     * accepted into the corpus, append their signatures so the NEXT batch
     * dedups against them too. Same parameters as the original build or
     * the banding widths diverge ([[requireSigWidth]] guards the read
-    * side). This RAW form is at-least-once on failure/retry — a
-    * duplicated key only makes the corpus side of the band join report
-    * the same duplicate twice (dedup verdicts unchanged, costs not);
-    * a micro-batch driver should call [[appendSignaturesOnce]], which
-    * rides the [[IndexLifecycle.appendOnce]] replay guard. */
-  def appendSignatures(df: DataFrame, textCol: String, keyCol: String,
-                       path: String, shingleN: Int = 3, numHashes: Int = 16,
-                       allowUnverifiedWidth: Boolean = false): Unit =
-    signatureAppendPlan(df, textCol, keyCol, path, shingleN, numHashes,
-        allowUnverifiedWidth)
-      .write.mode("append")
-      .parquet(IndexLifecycle.resolveDir(df.sparkSession, path))
-
-  /** [[appendSignatures]] with EXACTLY-ONCE effect under micro-batch
-    * replay ([[IndexLifecycle.appendOnce]] — a replayed raw append leaves
-    * duplicate signature rows: dedup verdicts stay right but every band
-    * join and verify pays the duplicates forever). Returns false on the
-    * replay no-op. `runId`: restart-stable (checkpoint path / `query.id`). */
+    * side). The rows land through [[IndexLifecycle.appendOnce]], so the
+    * effect is EXACTLY-ONCE under replay: a re-appended batch would leave
+    * duplicate signature rows — dedup verdicts stay right but every band
+    * join and verify pays the duplicates forever. A pre-_sn legacy
+    * artifact needs `allowUnverifiedWidth`; a legacy STRING-shingle one is
+    * refused (rebuild it). Returns false on the replay no-op. */
   def appendSignaturesOnce(df: DataFrame, textCol: String, keyCol: String,
                            path: String, runId: String, batchId: Long,
                            shingleN: Int = 3, numHashes: Int = 16,
@@ -203,9 +191,8 @@ object Dedup {
           .write.mode("overwrite").parquet(staging)
     }
 
-  /** The shared append body: the batch's signature plan, parameter- and
-    * schema-guarded against the LIVE artifact at `path` (both commit
-    * disciplines write identical bytes; only where/how differs). */
+  /** The append body: the batch's signature plan, parameter- and
+    * schema-guarded against the LIVE artifact at `path`. */
   private def signatureAppendPlan(df: DataFrame, textCol: String,
                                   keyCol: String, path: String,
                                   shingleN: Int, numHashes: Int,
@@ -221,22 +208,23 @@ object Dedup {
     requireSigParams(existing, numHashes, shingleN, path)
     val plan = signaturePlan(df, textCol, keyCol, shingleN, numHashes)
     // a pre-_sn legacy artifact must not grow schema-divergent parquet
-    // (the appendTextIndex pre-dl rule): keep the dir uniform, legacy
+    // (the appendTextIndexOnce pre-dl rule): keep the dir uniform, legacy
     // stays legacy until its next rebuild — which means the shingleN
     // guard above can only check numHashes for it. Nudge loudly: the
     // artifacts most likely to carry a forgotten non-default shingleN are
     // exactly the ones the guard cannot protect
     if (!existing.columns.contains("_sn")) {
       require(allowUnverifiedWidth,
-        s"appendSignatures: $path is a pre-_sn legacy artifact, so shingleN=" +
-          s"$shingleN CANNOT be verified against its build — a mismatch " +
-          "silently zeroes every exact-Jaccard verify. Rebuild with " +
+        s"appendSignaturesOnce: $path is a pre-_sn legacy artifact, so " +
+          s"shingleN=$shingleN CANNOT be verified against its build — a " +
+          "mismatch silently zeroes every exact-Jaccard verify. Rebuild with " +
           "buildSignatures (stamps _sn), or pass allowUnverifiedWidth=true " +
           "after confirming the original build parameter out-of-band")
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"appendSignatures: $path is a pre-_sn legacy artifact — shingleN=" +
-          s"$shingleN is UNVERIFIED against its build (allowUnverifiedWidth" +
-          "=true); rebuild with buildSignatures to enable the mismatch guard")
+        s"appendSignaturesOnce: $path is a pre-_sn legacy artifact — " +
+          s"shingleN=$shingleN is UNVERIFIED against its build " +
+          "(allowUnverifiedWidth=true); rebuild with buildSignatures to " +
+          "enable the mismatch guard")
     }
     // a pre-hashed-verify artifact stores _sh as shingle STRINGS; the
     // current plan emits hash32 ints. Appending would write two
@@ -710,7 +698,7 @@ object Dedup {
   /** Append-side guard: where the artifact carries `_sn` (post-r15
     * builds), a width mismatch refuses loudly; a legacy artifact keeps
     * its schema uniform (plan drops `_sn`) and gets the unverifiable
-    * warning — the [[appendSignatures]] legacy rules verbatim. */
+    * warning — the [[appendSignaturesOnce]] legacy rules verbatim. */
   private def postingsPlanGuarded(df: DataFrame, textCol: String,
                                   keyCol: String, path: String,
                                   shingleN: Int,
@@ -729,14 +717,14 @@ object Dedup {
       plan
     } else {
       require(allowUnverifiedWidth,
-        s"appendShinglePostings: $path is a pre-_sn legacy artifact, so " +
-          s"shingleN=$shingleN CANNOT be verified against its build — " +
+        s"appendShinglePostingsOnce: $path is a pre-_sn legacy artifact, " +
+          s"so shingleN=$shingleN CANNOT be verified against its build — " +
           "mixed widths share ~no hashes and collapse every containment " +
           "ratio. Rebuild with buildShinglePostings (stamps _sn), or pass " +
           "allowUnverifiedWidth=true after confirming the original build " +
           "parameter out-of-band")
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"appendShinglePostings: $path is a pre-_sn legacy artifact — " +
+        s"appendShinglePostingsOnce: $path is a pre-_sn legacy artifact — " +
           s"shingleN=$shingleN is UNVERIFIED against its build " +
           "(allowUnverifiedWidth=true); rebuild with buildShinglePostings " +
           "to enable the mismatch guard")
@@ -761,24 +749,16 @@ object Dedup {
   }
 
   /** Extend the posting artifact with NEW documents (the
-    * [[appendSignatures]] maintenance step for the containment kernel):
-    * postings are per-(doc, shingle) rows, so new docs only ADD rows —
-    * one append-mode write into the current version, nothing re-read. */
-  def appendShinglePostings(df: DataFrame, textCol: String, keyCol: String,
-                            path: String, shingleN: Int = 3,
-                            allowUnverifiedWidth: Boolean = false): Unit =
-    postingsPlanGuarded(df, textCol, keyCol, path, shingleN,
-        allowUnverifiedWidth)
-      .write.mode("append")
-      .parquet(IndexLifecycle.resolveDir(df.sparkSession, path))
-
-  /** [[appendShinglePostings]] with EXACTLY-ONCE effect under micro-batch
-    * replay ([[IndexLifecycle.appendOnce]] — duplicated posting rows
-    * inflate every containment count AND each doc's own shingle total,
-    * skewing containment ratios, not just costs). Returns false on the
+    * [[appendSignaturesOnce]] maintenance step for the containment
+    * kernel): postings are per-(doc, shingle) rows, so new docs only ADD
+    * rows — moved into the current version through
+    * [[IndexLifecycle.appendOnce]], nothing re-read. EXACTLY-ONCE under
+    * replay: duplicated posting rows would inflate every containment
+    * count AND each doc's own shingle total, skewing containment ratios,
+    * not just costs. A stamped artifact refuses a mismatched `shingleN`; a
+    * pre-_sn legacy one needs `allowUnverifiedWidth`. Returns false on the
     * replay no-op (plan construction and the artifact guards stay inside
-    * the callback, so a no-op replay runs no Spark action). `runId`:
-    * restart-stable (checkpoint path / `query.id`). */
+    * the callback, so a no-op replay runs no Spark action). */
   def appendShinglePostingsOnce(df: DataFrame, textCol: String,
                                 keyCol: String, path: String, runId: String,
                                 batchId: Long, shingleN: Int = 3,
@@ -1120,11 +1100,11 @@ object Dedup {
     * PARTIAL count `_n`) — the write-once artifact behind incremental
     * substring dedup, the [[buildSignatures]] lifecycle applied to grams.
     * The artifact's contract is "partial counts, consumers sum per hash"
-    * ([[readGramIndex]]): counts are additive, so [[appendGramIndex]]
-    * maintenance is a pure APPEND-mode write — no read-modify-rewrite of
-    * a 100 TB corpus's gram table, no coordination with concurrent
-    * readers, and a periodic compaction (re-aggregate into the next CAS
-    * version) is an optimization, never a correctness step.
+    * ([[readGramIndex]]): counts are additive, so [[appendGramIndexOnce]]
+    * maintenance is a pure append — no read-modify-rewrite of a 100 TB
+    * corpus's gram table, no coordination with concurrent readers, and a
+    * periodic compaction (re-aggregate into the next CAS version) is an
+    * optimization, never a correctness step.
     *
     * Lifecycle ([[IndexLifecycle]], the text/PQ/IVF scheme): partials
     * land under an immutable `root/v=N` and the `_current` pointer flips
@@ -1141,26 +1121,18 @@ object Dedup {
   }
 
   /** Extend a gram-index artifact IN PLACE with a new batch (the
-    * accepted-survivor maintenance step): one append-mode write of the
-    * batch's own (hash, count) partials into the CURRENT version
-    * directory — the existing files are neither read nor rewritten, so
-    * a reader that listed before the append sees a consistent older
-    * state (single-writer contract: never concurrent with a compact). */
-  def appendGramIndex(batch: DataFrame, textCol: String, keyCol: String,
-                      indexPath: String, k: Int = 8,
-                      allowUnverifiedWidth: Boolean = false): Unit =
-    gramPlanGuarded(batch, textCol, keyCol, indexPath, k,
-        allowUnverifiedWidth)
-      .write.mode("append")
-      .parquet(IndexLifecycle.resolveDir(batch.sparkSession, indexPath))
-
-  /** [[appendGramIndex]] with EXACTLY-ONCE effect under micro-batch replay
-    * ([[IndexLifecycle.appendOnce]] — replayed count partials DOUBLE the
-    * batch's gram counts, pushing grams over `minCount` that never
-    * repeated: silently over-aggressive substring stripping). Returns
-    * false on the replay no-op (plan + guards stay inside the callback,
-    * so a no-op replay runs no Spark action). `runId`: restart-stable
-    * (checkpoint path / `query.id`). */
+    * accepted-survivor maintenance step): the batch's own (hash, count)
+    * partials move into the CURRENT version directory through
+    * [[IndexLifecycle.appendOnce]] — the existing files are neither read
+    * nor rewritten, so a reader that listed before the append sees a
+    * consistent older state (single-writer contract: never concurrent
+    * with a compact). EXACTLY-ONCE under replay: re-appended count
+    * partials would DOUBLE the batch's gram counts, pushing grams over
+    * `minCount` that never repeated (silently over-aggressive substring
+    * stripping). A stamped artifact refuses a mismatched `k`; a pre-_gk
+    * legacy one needs `allowUnverifiedWidth`. Returns false on the replay
+    * no-op (plan + guards stay inside the callback, so a no-op replay runs
+    * no Spark action). */
   def appendGramIndexOnce(batch: DataFrame, textCol: String, keyCol: String,
                           indexPath: String, runId: String, batchId: Long,
                           k: Int = 8,
@@ -1171,8 +1143,8 @@ object Dedup {
         .write.mode("overwrite").parquet(staging)
     }
 
-  /** The shared gram append body (both commit disciplines write identical
-    * bytes): the batch's (hash, count) partials, with the gram width `k`
+  /** The gram append body: the batch's (hash, count) partials, with the
+    * gram width `k`
     * riding as the `_gk` constant (the `_sn` discipline — mixed-k hashes
     * fire substring stripping on phantom repeats). */
   private def gramAppendPlan(batch: DataFrame, textCol: String,
@@ -1183,7 +1155,7 @@ object Dedup {
 
   /** Append-side guard: a `_gk`-bearing artifact (post-r15 build) refuses
     * a mismatched k; a legacy artifact keeps its schema uniform (plan
-    * drops `_gk`) and warns — the [[appendSignatures]] legacy rules. */
+    * drops `_gk`) and warns — the [[appendSignaturesOnce]] legacy rules. */
   private def gramPlanGuarded(batch: DataFrame, textCol: String,
                               keyCol: String, indexPath: String,
                               k: Int,
@@ -1202,14 +1174,14 @@ object Dedup {
       plan
     } else {
       require(allowUnverifiedWidth,
-        s"appendGramIndex: $indexPath is a pre-_gk legacy artifact, so " +
-          s"k=$k CANNOT be verified against its build — mixed gram widths " +
-          "fire substring stripping on phantom repeats. Rebuild with " +
+        s"appendGramIndexOnce: $indexPath is a pre-_gk legacy artifact, " +
+          s"so k=$k CANNOT be verified against its build — mixed gram " +
+          "widths fire substring stripping on phantom repeats. Rebuild with " +
           "buildGramIndex (stamps _gk), or pass allowUnverifiedWidth=true " +
           "after confirming the original build parameter out-of-band")
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"appendGramIndex: $indexPath is a pre-_gk legacy artifact — k=$k " +
-          "is UNVERIFIED against its build (allowUnverifiedWidth=true); " +
+        s"appendGramIndexOnce: $indexPath is a pre-_gk legacy artifact — " +
+          s"k=$k is UNVERIFIED against its build (allowUnverifiedWidth=true); " +
           "rebuild with buildGramIndex to enable the mismatch guard")
       plan.drop("_gk")
     }

@@ -147,12 +147,14 @@ object IndexLifecycle {
   // ──────────────────── replay-safe append protocol ────────────────────
   //
   // `foreachBatch` is at-least-once: a micro-batch that fails after SOME of
-  // its append-mode writes landed is re-delivered wholesale, and a raw
-  // re-append double-counts (BM25 df/tf partials, gram counts, duplicate
-  // signature rows — silently wrong answers, not crashes). This protocol
-  // gives any append-maintained artifact the [[graft.streaming.SnapshotSink]]
-  // (runId, batchId) idempotence, generalized from "merge one table" to
-  // "append N part-files across M sub-tables":
+  // its writes landed is re-delivered wholesale, and a plain re-append
+  // double-counts (BM25 df/tf partials, gram counts, duplicate signature
+  // rows — silently wrong answers, not crashes). This protocol is the ONE
+  // write path of every append-maintained artifact (text, phrase, PQ,
+  // PQ-IVF, IVF, signatures, shingle postings, grams): it gives each the
+  // [[graft.streaming.SnapshotSink]] (runId, batchId) idempotence,
+  // generalized from "merge one table" to "append N part-files across M
+  // sub-tables":
   //
   //   guard   read `root/_appends/run-<tag(runId)>`; committed ⇒ no-op
   //   recover a leftover `intent-<tag>-<batch>` manifest lists every live
@@ -303,9 +305,9 @@ object IndexLifecycle {
   }
 
   /** Highest batchId committed into `root` by [[appendOnce]] under this
-    * runId — None if this run never committed here (raw append*
-    * maintenance leaves no markers), or if the tag-addressed marker
-    * belongs to a DIFFERENT runId (tag collision — logged loudly). */
+    * runId — None if this run never committed here, or if the
+    * tag-addressed marker belongs to a DIFFERENT runId (tag collision —
+    * logged loudly). */
   def lastAppendedBatch(spark: SparkSession, root: String,
                         runId: String): Option[Long] =
     markerFor(spark, root, runId).map(_._1)
@@ -435,6 +437,10 @@ object IndexLifecycle {
    * Spark's checkpointed micro-batch ids satisfy this by construction
    * (a restart resumes AT the failed id, never below it); a hand-rolled
    * caller inventing non-monotone ids would silently lose those batches.
+   * A one-shot batch job (a daily crawl, a fixture build) picks ONE
+   * stable runId per maintaining job — the same string on every rerun —
+   * and numbers its appends 0, 1, 2, … in order, so a rerun of a failed
+   * job replays its ids and no-ops the committed ones.
    *
    * Two hard refusals guard the protocol's blind spots:
    *  - a torn intent from ANOTHER run/batch pending on the artifact
@@ -1245,7 +1251,7 @@ object IndexLifecycle {
       case Some(p) if p.fieldNames.contains("positions") => "phrase-index"
       case Some(p) =>
         if (!p.fieldNames.contains("dl"))
-          flags += "pre-dl postings: appendTextIndex refuses; rebuild with buildTextIndex"
+          flags += "pre-dl postings: appendTextIndexOnce refuses; rebuild with buildTextIndex"
         if (!tableExists(spark, s"$dir/terms"))
           flags += "no terms dictionary: df recomputed from postings per probe; rebuild or compact to materialize"
         "text-index"

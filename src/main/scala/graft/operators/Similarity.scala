@@ -115,7 +115,7 @@ object Similarity {
     *
     * Lifecycle ([[IndexLifecycle]], the text-index scheme): the lists land
     * under an immutable `outPath/v=N` staged completely — including the
-    * FROZEN `_centroids` table [[appendIvfIndex]] routes later batches
+    * FROZEN `_centroids` table [[appendIvfIndexOnce]] routes later batches
     * with — before the `_current` pointer flips, so a rebuild over a live
     * index never tears a concurrent probe. */
   def ivfBuildWith(df: DataFrame, vecCol: String, outPath: String,
@@ -137,24 +137,16 @@ object Similarity {
   /** Extend a prebuilt IVF index with NEW rows: each batch row routes to
     * its list with the index's own FROZEN `_centroids` table (a rebuild
     * would re-encode the whole corpus; a daily crawl must not), and the
-    * rows append into the right `_list=` partition directories of the
-    * CURRENT version — files only accumulate, so a reader that listed
-    * before the append sees a consistent older state. Keys must be NEW
-    * (the [[TermStats.appendTextIndex]] contract); append == rebuild on
+    * rows move into the right `_list=` partition directories of the
+    * CURRENT version through [[IndexLifecycle.appendOnce]] — files only
+    * accumulate, so a reader that listed before the append sees a
+    * consistent older state, and a replayed (runId, batchId) no-ops
+    * instead of duplicating rows in the routed lists (duplicated probe
+    * hits and doubled list scans). Keys must be NEW (the
+    * [[TermStats.appendTextIndexOnce]] contract); append == rebuild on
     * probe results is unit-pinned. Single-writer: never concurrent with
-    * a rebuild ([[IndexLifecycle]]'s contract). */
-  def appendIvfIndex(batch: DataFrame, vecCol: String, keyCol: String,
-                     indexPath: String): Unit = {
-    val dir = IndexLifecycle.resolveDir(batch.sparkSession, indexPath)
-    ivfAppendPlan(batch, vecCol, dir)
-      .write.mode("append").partitionBy("_list").parquet(dir)
-  }
-
-  /** [[appendIvfIndex]] with EXACTLY-ONCE effect under micro-batch replay
-    * ([[IndexLifecycle.appendOnce]] — a replayed raw append leaves
-    * duplicate rows in the routed lists: duplicated probe hits and doubled
-    * list scans). Returns false on the replay no-op. `runId`:
-    * restart-stable (checkpoint path / `query.id`). */
+    * a rebuild ([[IndexLifecycle]]'s contract). Returns false on the
+    * replay no-op. */
   def appendIvfIndexOnce(batch: DataFrame, vecCol: String, keyCol: String,
                          indexPath: String, runId: String,
                          batchId: Long): Boolean =
@@ -167,10 +159,9 @@ object Similarity {
           .write.mode("overwrite").partitionBy("_list").parquet(staging)
     }
 
-  /** The shared append body: the batch routed on the index's own FROZEN
-    * `_centroids`, dim-guarded (both commit disciplines write identical
-    * bytes and the staged `_list=` layout mirrors the live one, so the
-    * move lands each file in its right list directory). */
+  /** The append body: the batch routed on the index's own FROZEN
+    * `_centroids`, dim-guarded (the staged `_list=` layout mirrors the
+    * live one, so the move lands each file in its right list directory). */
   private def ivfAppendPlan(batch: DataFrame, vecCol: String,
                             dir: String): DataFrame = {
     val centroids = readCentroids(batch.sparkSession, dir)
@@ -833,10 +824,11 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_qid")).orderBy(col("_s").desc, col(keyCol).asc)
     // the running count needs an explicit ROWS frame: the default RANGE
-    // frame counts ORDER-BY PEERS together, and a duplicated key row (the
-    // documented at-least-once residue of the raw append path) ties with
-    // its twin on (_s, key) — RANGE would count both at both rows and
-    // diverge from ivfTopKBatchPrebuilt's row_number at the k boundary
+    // frame counts ORDER-BY PEERS together, and a duplicated key row (a
+    // caller appending a key the index already holds, against the
+    // new-keys contract) ties with its twin on (_s, key) — RANGE would
+    // count both at both rows and diverge from ivfTopKBatchPrebuilt's
+    // row_number at the k boundary
     val wRows = w.rowsBetween(
       org.apache.spark.sql.expressions.Window.unboundedPreceding,
       org.apache.spark.sql.expressions.Window.currentRow)
@@ -992,13 +984,16 @@ object Similarity {
   /**
    * Extend a prebuilt PQ index with NEW rows, encoded with the index's own
    * FROZEN codebook — the maintenance half of the vector-index lifecycle
-   * (the [[TermStats.appendTextIndex]] discipline): one append-mode write
-   * of the batch's codes into the CURRENT version's codes table; the
-   * existing artifact is neither read nor rewritten, so a daily crawl
-   * keeps the serving index fresh without re-encoding the corpus. Keys
-   * must be NEW; append == rebuild-with-the-same-codebook on probe
-   * results is oracle-pinned (q_ann_pq_append). Single-writer: never
-   * concurrent with a rebuild.
+   * (the [[TermStats.appendTextIndexOnce]] discipline): the batch's codes
+   * stage and move into the CURRENT version's codes table through
+   * [[IndexLifecycle.appendOnce]]; the existing artifact is neither read
+   * nor rewritten, so a daily crawl keeps the serving index fresh without
+   * re-encoding the corpus, and a replayed (runId, batchId) no-ops
+   * instead of leaving duplicate code rows (duplicated ADC hits crowd
+   * real neighbors out of every top-k). Keys must be NEW; append ==
+   * rebuild-with-the-same-codebook on probe results is oracle-pinned
+   * (q_ann_pq_append). Single-writer: never concurrent with a rebuild.
+   * Returns false on the replay no-op.
    *
    * Codebook drift: the frozen codebook was sampled/trained on the corpus
    * AS OF the build, so quantization error grows as appended data drifts
@@ -1012,19 +1007,6 @@ object Similarity {
    * periodically and trigger a retraining rebuild when recall decays —
    * the rebuild is safe under a live reader by the CAS contract.
    */
-  def appendPqIndex(batch: DataFrame, vecCol: String, keyCol: String,
-                    indexPath: String, m: Int = 8, dim: Int = 64,
-                    scale: Double = 1e6): Unit = {
-    val dir = IndexLifecycle.resolveDir(batch.sparkSession, indexPath)
-    pqAppendPlan(batch, vecCol, keyCol, dir, m, dim, scale)
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  /** [[appendPqIndex]] with EXACTLY-ONCE effect under micro-batch replay
-    * ([[IndexLifecycle.appendOnce]] — a replayed raw append leaves
-    * duplicate code rows: duplicated ADC hits crowd real neighbors out of
-    * every top-k). Returns false on the replay no-op. `runId`:
-    * restart-stable (checkpoint path / `query.id`). */
   def appendPqIndexOnce(batch: DataFrame, vecCol: String, keyCol: String,
                         indexPath: String, runId: String, batchId: Long,
                         m: Int = 8, dim: Int = 64,
@@ -1054,7 +1036,7 @@ object Similarity {
     * version of the artifact, including legacy ones that predate any
     * build metadata): a shorter/longer code array would land silently in
     * the serving codes table and corrupt every subsequent ADC ranking —
-    * the loud-refusal discipline of [[TermStats.appendTextIndex]]. An
+    * the loud-refusal discipline of [[TermStats.appendTextIndexOnce]]. An
     * empty codes table constrains nothing. */
   private def requireMatchingM(spark: org.apache.spark.sql.SparkSession,
                                dir: String, m: Int): Unit =
@@ -1067,23 +1049,11 @@ object Similarity {
             "pqBuildWith/pqIvfBuild to change the code layout")
       }
 
-  /** [[appendPqIndex]] for a ROUTED ([[pqIvfBuild]]) index: the batch
+  /** [[appendPqIndexOnce]] for a ROUTED ([[pqIvfBuild]]) index: the batch
     * routes on the frozen `_centroids` AND encodes with the frozen
-    * `_codebook`, appending into the right `_list=` partition
-    * directories. Same contracts (new keys, single writer, drift note)
-    * as the flat form. */
-  def appendPqIvfIndex(batch: DataFrame, vecCol: String, keyCol: String,
-                       indexPath: String, m: Int = 8, dim: Int = 64,
-                       scale: Double = 1e6): Unit = {
-    val dir = IndexLifecycle.resolveDir(batch.sparkSession, indexPath)
-    pqIvfAppendPlan(batch, vecCol, keyCol, dir, m, dim, scale)
-      .write.mode("append").partitionBy("_list").parquet(s"$dir/codes")
-  }
-
-  /** [[appendPqIvfIndex]] with EXACTLY-ONCE effect under micro-batch
-    * replay ([[IndexLifecycle.appendOnce]] — the [[appendPqIndexOnce]]
-    * rationale on the routed layout). Returns false on the replay no-op.
-    * `runId`: restart-stable (checkpoint path / `query.id`). */
+    * `_codebook`, moving into the right `_list=` partition directories.
+    * Same contracts (exactly-once, new keys, single writer, drift note)
+    * as the flat form. Returns false on the replay no-op. */
   def appendPqIvfIndexOnce(batch: DataFrame, vecCol: String, keyCol: String,
                            indexPath: String, runId: String, batchId: Long,
                            m: Int = 8, dim: Int = 64,

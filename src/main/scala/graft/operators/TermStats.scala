@@ -586,7 +586,7 @@ object TermStats {
     // probe reads |query terms| metadata rows. Derived from the written
     // postings (one columnar term-only scan) so the build stays one
     // tokenize pass. Rows are ADDITIVE partials (the stats discipline) —
-    // appendTextIndex appends the batch's own counts, readers sum.
+    // appendTextIndexOnce appends the batch's own counts, readers sum.
     writeTermsTable(spark, vdir)
     IndexLifecycle.flipPointer(spark, outPath, next)
   }
@@ -925,35 +925,21 @@ object TermStats {
 
   /**
    * Extend the text index IN PLACE with accepted new documents (the
-   * [[graft.operators.Dedup.appendGramIndex]] maintenance discipline):
-   * three append-mode writes — the batch's own postings, lengths, and one
-   * (n, Σdl) stats delta row. The existing artifact is neither read nor
-   * rewritten; [[bm25TopKPrebuilt]] aggregates the stats partials on
-   * read. Document keys must be NEW (an appended duplicate key would
-   * double-count its tf rows); appended postings files are term-sorted
-   * within themselves, so pruning degrades gracefully rather than
-   * breaking. Append == rebuild equality is unit-pinned. This RAW form is
-   * at-least-once under failure/retry — a micro-batch driver should call
-   * [[appendTextIndexOnce]] (the [[IndexLifecycle.appendOnce]] replay
-   * guard): a replayed batch here double-counts df/tf partials, which is
-   * silently wrong ranking, not a crash.
+   * [[graft.operators.Dedup.appendGramIndexOnce]] maintenance discipline):
+   * the batch's own postings, lengths and one (n, Σdl) stats delta row
+   * stage and move into the current version through
+   * [[IndexLifecycle.appendOnce]], so the effect is EXACTLY-ONCE under
+   * replay — a re-appended batch would double-count df/tf partials,
+   * silently inflating BM25 scores rather than crashing. The existing
+   * artifact is neither read nor rewritten; [[bm25TopKPrebuilt]]
+   * aggregates the stats partials on read. Document keys must be NEW (an
+   * appended duplicate key would double-count its tf rows); appended
+   * postings files are term-sorted within themselves, so pruning degrades
+   * gracefully rather than breaking. Append == rebuild equality is
+   * unit-pinned. A pre-dl legacy index is refused (rebuild it once).
+   * Returns false on the replay no-op; `runId`/`batchId` as
+   * [[IndexLifecycle.appendOnce]] defines them.
    */
-  def appendTextIndex(batch: DataFrame, textCol: String, keyCol: String,
-                      indexPath: String): Unit = {
-    // append into the CURRENT version dir: files only ever accumulate, so
-    // a reader that listed before the append sees a consistent older
-    // state (single-writer contract: never concurrent with a compact)
-    val dir = resolveIndexDir(batch.sparkSession, indexPath)
-    stageTextAppend(batch, textCol, keyCol, indexPath, dir,
-      (df, t) => df.write.mode("append").parquet(s"$dir/$t"))
-  }
-
-  /** [[appendTextIndex]] with EXACTLY-ONCE effect under micro-batch replay
-    * (the [[IndexLifecycle.appendOnce]] protocol — foreachBatch is
-    * at-least-once, and a raw re-append of a replayed batch double-counts
-    * df/tf partials: silently inflated BM25 scores, not a crash). Returns
-    * false on the replay no-op. `runId` must be restart-stable (checkpoint
-    * path or `query.id`, never `query.runId`). */
   def appendTextIndexOnce(batch: DataFrame, textCol: String, keyCol: String,
                           indexPath: String, runId: String,
                           batchId: Long): Boolean =
@@ -966,24 +952,20 @@ object TermStats {
   private[graft] def appendTextIndexOnceAt(batch: DataFrame, textCol: String,
                                            keyCol: String, indexPath: String,
                                            runId: String, batchId: Long,
-                                           failAt: String): Boolean = {
-    val dir = resolveIndexDir(batch.sparkSession, indexPath)
-    IndexLifecycle.appendOnceImpl(batch.sparkSession, indexPath, runId,
-      batchId,
-      staging => stageTextAppend(batch, textCol, keyCol, indexPath, dir,
-        (df, t) => df.write.mode("overwrite").parquet(s"$staging/$t")),
-      failAt)
-  }
+                                           failAt: String): Boolean =
+    IndexLifecycle.appendOnceImpl(batch.sparkSession, indexPath, runId, batchId,
+      stageTextAppend(batch, textCol, keyCol, indexPath, _), failAt)
 
-  /** The shared append body: computes the batch's postings/lengths/stats
-    * (+ conditional terms) frames against the LIVE index at `dir` and
-    * hands each to `write` — mode("append") into the live tables for the
-    * raw path, mode("overwrite") into a staging dir for the replay-safe
-    * path (identical bytes either way; only the commit discipline
-    * differs). */
+  /** The append body: computes the batch's postings/lengths/stats (+
+    * conditional terms) frames against the LIVE index and writes each
+    * into the `staging` directory [[IndexLifecycle.appendOnce]] moves
+    * into the live version. */
   private def stageTextAppend(batch: DataFrame, textCol: String,
-                              keyCol: String, indexPath: String, dir: String,
-                              write: (DataFrame, String) => Unit): Unit = {
+                              keyCol: String, indexPath: String,
+                              staging: String): Unit = {
+    val dir = resolveIndexDir(batch.sparkSession, indexPath)
+    def write(df: DataFrame, table: String): Unit =
+      df.write.mode("overwrite").parquet(s"$staging/$table")
     // a pre-dl legacy index must not grow schema-divergent parquet (dl-
     // bearing rows beside dl-less ones read back inconsistently without
     // mergeSchema) — rebuild it once with buildTextIndex instead
@@ -1107,21 +1089,12 @@ object TermStats {
     IndexLifecycle.flipPointer(spark, outPath, next)
   }
 
-  /** Append new documents' positional postings into the current version —
-    * the [[appendTextIndex]] maintenance discipline verbatim: append-only
-    * files, NEW keys only, append == rebuild equality unit-pinned. */
-  def appendPhraseIndex(batch: DataFrame, textCol: String, keyCol: String,
-                        indexPath: String): Unit = {
-    val dir = resolveIndexDir(batch.sparkSession, indexPath)
-    phraseAppendPlan(batch, textCol, keyCol)
-      .write.mode("append").parquet(s"$dir/postings")
-  }
-
-  /** [[appendPhraseIndex]] with EXACTLY-ONCE effect under micro-batch
-    * replay ([[IndexLifecycle.appendOnce]] — a replayed raw append leaves
-    * duplicate positional postings, doubling phrase_hits). Returns false
-    * on the replay no-op. `runId`: restart-stable (checkpoint path /
-    * `query.id`). */
+  /** Append new documents' positional postings into the current version
+    * with EXACTLY-ONCE effect under replay ([[IndexLifecycle.appendOnce]]
+    * — a re-appended batch leaves duplicate positional postings, doubling
+    * phrase_hits). The [[appendTextIndexOnce]] maintenance discipline
+    * verbatim: append-only files, NEW keys only, append == rebuild
+    * equality unit-pinned. Returns false on the replay no-op. */
   def appendPhraseIndexOnce(batch: DataFrame, textCol: String,
                             keyCol: String, indexPath: String,
                             runId: String, batchId: Long): Boolean =

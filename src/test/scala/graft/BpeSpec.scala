@@ -282,10 +282,19 @@ class BpeSpec extends SparkSpec {
     val letter = (k: Long) => expr(s"char(97 + pmod(floor(id / $k), 26))")
     val d = spark.range(bound + 1L)
       .select(concat(letter(1), letter(26), letter(676), letter(17576)).as("text"))
-    assert(Bpe.collectWords(d, "text", bound).length == bound + 1)
-    assert(Bpe.collectWords(d, "text", 10).length == 11)
-    val ((ms, vocab), labels, _) = jobLabels(Bpe.train(d, "text", 2))
+    val words = Bpe.wordCounts(d, "text")
+    assert(Bpe.collectWords(words, bound).length == bound + 1)
+    assert(Bpe.collectWords(words, 10).length == 11)
+    // the corpus is aggregated ONCE: the bounded collect and the
+    // distributed loop read the same word table, so a tap on the corpus
+    // counts each document once over the whole training
+    val read = spark.sparkContext.longAccumulator("bpe corpus rows")
+    val tap = udf { (t: String) => read.add(1); t }.asNondeterministic()
+    val ((ms, vocab), labels, _) =
+      jobLabels(Bpe.train(d.select(tap(col("text")).as("text")), "text", 2))
     assert(labels.contains(Bpe.DistributedLabel), labels)
+    assert(read.sum == bound + 1L,
+      s"distributed training read ${read.sum} corpus rows, not ${bound + 1}")
     val (driverMs, driverVocab) = Bpe.train(d, "text", 2, driverWords = bound + 1)
     assert(ms == driverMs)
     assert(rows(vocab) == rows(driverVocab))

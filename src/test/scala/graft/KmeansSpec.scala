@@ -359,9 +359,9 @@ class KmeansSpec extends SparkSpec {
   }
 
   test("ivfRecallReport is exact when the index carries a duplicated key " +
-       "row (the raw append path's at-least-once residue): the running " +
-       "probe-rank count uses a ROWS frame, so tied twins straddling the " +
-       "k boundary cannot erase a hit") {
+       "row (a key appended twice, against the new-keys contract): the " +
+       "running probe-rank count uses a ROWS frame, so tied twins " +
+       "straddling the k boundary cannot erase a hit") {
     // k=1 makes the hazard sharp: the query's own row duplicated ties at
     // the top, and a RANGE-framed running count would see 2 at BOTH rows
     // (order-by peers), flag neither as a probe hit, and report recall 0
@@ -369,7 +369,8 @@ class KmeansSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-recdup").toString
     Similarity.ivfBuild(emb, "embedding", "vec_id", s"$path/idx", dim = 64)
     val self = emb.filter(col("vec_id") === 0)
-    Similarity.appendIvfIndex(self, "embedding", "vec_id", s"$path/idx")
+    assert(Similarity.appendIvfIndexOnce(self, "embedding", "vec_id",
+      s"$path/idx", "recdup-run", 0L))
     val rep = Similarity.ivfRecallReport(spark, s"$path/idx", self,
         "vec_id", "embedding", "embedding", "vec_id", k = 1, dim = 64,
         nprobes = Seq(16))

@@ -49,9 +49,9 @@ class MigrationSweepSpec extends SparkSpec {
 
     // string appends REFUSE against the legacy artifact (the r16 rule)
     intercept[IllegalArgumentException] {
-      Dedup.appendSignatures(Seq((9L, "the quick brown fox jumps over a dog"))
-        .toDF("doc_id", "text"), "text", "doc_id", root, shingleN = 3,
-        numHashes = 16)
+      Dedup.appendSignaturesOnce(
+        Seq((9L, "the quick brown fox jumps over a dog")).toDF("doc_id", "text"),
+        "text", "doc_id", root, "mig-run", 0L, shingleN = 3, numHashes = 16)
     }
 
     val m = Migrate.migrateArtifact(spark, root)
@@ -62,14 +62,14 @@ class MigrationSweepSpec extends SparkSpec {
     assert(probe() == before,
       "migration must not change probe results")
     // and the escape hatch is now unnecessary
-    Dedup.appendSignatures(Seq((9L, "the quick brown fox jumps over a dog"))
-      .toDF("doc_id", "text"), "text", "doc_id", root, shingleN = 3,
-      numHashes = 16)
+    assert(Dedup.appendSignaturesOnce(
+      Seq((9L, "the quick brown fox jumps over a dog")).toDF("doc_id", "text"),
+      "text", "doc_id", root, "mig-run", 0L, shingleN = 3, numHashes = 16))
     // the width guard is LIVE again: a wrong width now refuses
     val e = intercept[IllegalArgumentException] {
-      Dedup.appendSignatures(Seq((10L, "x y z w v u t s"))
-        .toDF("doc_id", "text"), "text", "doc_id", root, shingleN = 5,
-        numHashes = 16)
+      Dedup.appendSignaturesOnce(Seq((10L, "x y z w v u t s"))
+        .toDF("doc_id", "text"), "text", "doc_id", root, "mig-run", 1L,
+        shingleN = 5, numHashes = 16)
     }
     assert(e.getMessage.contains("shingleN"), s"$e")
   }
@@ -100,9 +100,10 @@ class MigrationSweepSpec extends SparkSpec {
         numHashes = 16, bands = 4, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(probe(root) == probe(modern))
-    Dedup.appendSignatures(Seq((9L, "more quick brown fox text here"))
-      .toDF("doc_id", "text"), "text", "doc_id", root, shingleN = 3,
-      numHashes = 16) // no escape hatch needed
+    assert(Dedup.appendSignaturesOnce(
+      Seq((9L, "more quick brown fox text here")).toDF("doc_id", "text"),
+      "text", "doc_id", root, "mig-run", 0L, shingleN = 3,
+      numHashes = 16)) // no escape hatch needed
   }
 
   test("pre-_gk gram index: migrate stamps the declared width; " +
@@ -128,10 +129,10 @@ class MigrationSweepSpec extends SparkSpec {
       .substringDedupPrebuilt(spark, p, incoming, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getString(3))).toSeq
     assert(strip(root) == strip(modern))
-    Dedup.appendGramIndex(incoming, "text", "doc_id", root, k = 8)
+    assert(Dedup.appendGramIndexOnce(incoming, "text", "doc_id", root, "mig-run", 0L, k = 8))
     // the width guard is live again
     val e = intercept[IllegalArgumentException] {
-      Dedup.appendGramIndex(incoming, "text", "doc_id", root, k = 4)
+      Dedup.appendGramIndexOnce(incoming, "text", "doc_id", root, "mig-run", 1L, k = 4)
     }
     assert(e.getMessage.contains("was built with k=8"), s"$e")
   }
@@ -162,9 +163,9 @@ class MigrationSweepSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(root) == bm25(modern))
     // appends work against the migrated index (pre-dl used to refuse)
-    TermStats.appendTextIndex(
+    assert(TermStats.appendTextIndexOnce(
       Seq((9L, "another quick document")).toDF("doc_id", "text"),
-      "text", "doc_id", root)
+      "text", "doc_id", root, "mig-run", 0L))
   }
 
   test("migrateFlagged sweeps a fleet root: flagged artifacts migrate, " +

@@ -1492,8 +1492,8 @@ class OperatorsSpec extends SparkSpec {
       .write.parquet(s"$tmp/legacy")
     val docs = Seq((9L, "a b c d e")).toDF("doc_id", "text")
     val appendErr = intercept[IllegalArgumentException] {
-      Dedup.appendSignatures(docs, "text", "doc_id", s"$tmp/legacy",
-        shingleN = 3, numHashes = 16)
+      Dedup.appendSignaturesOnce(docs, "text", "doc_id", s"$tmp/legacy",
+        "legacy-run", 0L, shingleN = 3, numHashes = 16)
     }
     assert(appendErr.getMessage.contains("rebuild"), s"$appendErr")
     val dedupErr = intercept[IllegalArgumentException] {
@@ -2300,7 +2300,7 @@ class OperatorsSpec extends SparkSpec {
     assert(!hits(Seq("a", "b")).contains(4L))
     // append == rebuild: new docs join the same artifact
     val b = Seq((5L, "q a b q")).toDF("doc_id", "text")
-    TermStats.appendPhraseIndex(b, "text", "doc_id", s"$dir/idx")
+    assert(TermStats.appendPhraseIndexOnce(b, "text", "doc_id", s"$dir/idx", "run", 0L))
     val appended = hits(Seq("a", "b"))
     val dir2 = java.nio.file.Files.createTempDirectory("graft-phrase2").toString
     TermStats.buildPhraseIndex(a.union(b), "text", "doc_id", s"$dir2/idx")
@@ -2326,7 +2326,8 @@ class OperatorsSpec extends SparkSpec {
     assert(onlyA == graft.operators.TermStats
       .bm25TopK(a, "text", "doc_id", Seq("a", "d"), k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-    graft.operators.TermStats.appendTextIndex(b, "text", "doc_id", s"$dir/idx")
+    assert(graft.operators.TermStats.appendTextIndexOnce(b, "text", "doc_id",
+      s"$dir/idx", "text-run", 0L))
     val pre = graft.operators.TermStats
       .bm25TopKPrebuilt(spark, s"$dir/idx", "doc_id", Seq("a", "d"), k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -2376,8 +2377,8 @@ class OperatorsSpec extends SparkSpec {
     // appending dl-bearing postings beside dl-less ones would read back
     // inconsistently without mergeSchema — must be refused, not mixed
     val e = intercept[IllegalArgumentException] {
-      TermStats.appendTextIndex(Seq((4L, "a a")).toDF("doc_id", "text"),
-        "text", "doc_id", idx)
+      TermStats.appendTextIndexOnce(Seq((4L, "a a")).toDF("doc_id", "text"),
+        "text", "doc_id", idx, "legacy-run", 0L)
     }
     assert(e.getMessage.contains("legacy"))
   }
@@ -2390,7 +2391,7 @@ class OperatorsSpec extends SparkSpec {
     val b = Seq((3L, "d d b"), (4L, "x y a")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft-terms").toString
     TermStats.buildTextIndex(a, "text", "doc_id", s"$dir/idx")
-    TermStats.appendTextIndex(b, "text", "doc_id", s"$dir/idx")
+    assert(TermStats.appendTextIndexOnce(b, "text", "doc_id", s"$dir/idx", "run", 0L))
     val vdir = TermStats.resolveIndexDir(spark, s"$dir/idx")
     // summed partials must equal a recount over the grown postings
     val fromTerms = spark.read.parquet(s"$vdir/terms")
@@ -2410,7 +2411,7 @@ class OperatorsSpec extends SparkSpec {
     val fsPath = new org.apache.hadoop.fs.Path(s"$v2/terms")
     fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(fsPath, true)
-    TermStats.appendTextIndex(b, "text", "doc_id", s"$dir2/idx")
+    assert(TermStats.appendTextIndexOnce(b, "text", "doc_id", s"$dir2/idx", "run", 0L))
     assert(!IndexLifecycle.tableExists(spark, s"$v2/terms"),
       "append must not seed a partial-only terms/ on an index built without one")
     val served = TermStats
@@ -2475,7 +2476,7 @@ class OperatorsSpec extends SparkSpec {
     val b = Seq((2L, "x1 x2 x3 y1"), (3L, "z1 z2 z3")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft-gram2").toString
     Dedup.buildGramIndex(a, "text", "doc_id", s"$dir/g", k = 3)
-    Dedup.appendGramIndex(b, "text", "doc_id", s"$dir/g", k = 3)
+    assert(Dedup.appendGramIndexOnce(b, "text", "doc_id", s"$dir/g", "run", 0L, k = 3))
     Dedup.buildGramIndex(a.union(b), "text", "doc_id", s"$dir/full", k = 3)
     val inc = Dedup.readGramIndex(spark, s"$dir/g").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2522,14 +2523,13 @@ class OperatorsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-once").toString
     val run = "crawl-run"
 
-    // signatures: Once-append twin vs raw-append twin, probe equality
+    // signatures: probe equality with the one-shot rebuild
     Dedup.buildSignatures(base, "text", "doc_id", s"$dir/sig")
     assert(Dedup.appendSignaturesOnce(batch, "text", "doc_id", s"$dir/sig",
       run, 0L))
     assert(!Dedup.appendSignaturesOnce(batch, "text", "doc_id", s"$dir/sig",
       run, 0L), "signature replay must no-op")
-    Dedup.buildSignatures(base, "text", "doc_id", s"$dir/sig2")
-    Dedup.appendSignatures(batch, "text", "doc_id", s"$dir/sig2")
+    Dedup.buildSignatures(base.union(batch), "text", "doc_id", s"$dir/sig2")
     val crawl = Seq((9L, "the quick brown fox jumps over the lazy dog every evening too"))
       .toDF("doc_id", "text")
     def sigVerdicts(p: String) = Dedup
@@ -2560,8 +2560,8 @@ class OperatorsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gcounts(s"$dir/g") == gcounts(s"$dir/g2"))
 
-    // phrase index: a replayed raw append would DOUBLE phrase_hits —
-    // the Once guard keeps the count exact
+    // phrase index: a re-appended batch would DOUBLE phrase_hits — the
+    // replay guard keeps the count exact
     TermStats.buildPhraseIndex(base, "text", "doc_id", s"$dir/ph")
     assert(TermStats.appendPhraseIndexOnce(batch, "text", "doc_id",
       s"$dir/ph", run, 0L))
@@ -2598,41 +2598,32 @@ class OperatorsSpec extends SparkSpec {
 
     Dedup.buildGramIndex(docs, "text", "doc_id", s"$dir/g", k = 3)
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.appendGramIndex(more, "text", "doc_id", s"$dir/g", k = 4)
+      Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/g", "run", 0L, k = 4)
     }
     assert(e1.getMessage.contains("k=3") && e1.getMessage.contains("k=4"))
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/g",
-        "run", 0L, k = 8)
-    }
-    assert(e2.getMessage.contains("k=3"))
     val e3 = intercept[IllegalArgumentException] {
       Dedup.substringDedupPrebuilt(spark, s"$dir/g", more, "text", "doc_id",
         k = 8)
     }
     assert(e3.getMessage.contains("k=3"), s"probe must refuse too: $e3")
     // matching k appends; compaction keeps the stamp so the guard survives
-    Dedup.appendGramIndex(more, "text", "doc_id", s"$dir/g", k = 3)
+    assert(Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/g", "run", 0L, k = 3))
     Dedup.compactGramIndex(spark, s"$dir/g")
     val e4 = intercept[IllegalArgumentException] {
-      Dedup.appendGramIndex(more, "text", "doc_id", s"$dir/g", k = 4)
+      Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/g", "run", 1L, k = 4)
     }
     assert(e4.getMessage.contains("k=3"),
       "compaction must not downgrade the guarded artifact to legacy")
 
     Dedup.buildShinglePostings(docs, "text", "doc_id", s"$dir/sh", shingleN = 3)
     val e5 = intercept[IllegalArgumentException] {
-      Dedup.appendShinglePostings(more, "text", "doc_id", s"$dir/sh",
-        shingleN = 5)
-    }
-    assert(e5.getMessage.contains("shingleN=3") &&
-      e5.getMessage.contains("shingleN=5"))
-    val e6 = intercept[IllegalArgumentException] {
       Dedup.appendShinglePostingsOnce(more, "text", "doc_id", s"$dir/sh",
         "run", 0L, shingleN = 5)
     }
-    assert(e6.getMessage.contains("shingleN=3"))
-    Dedup.appendShinglePostings(more, "text", "doc_id", s"$dir/sh", shingleN = 3)
+    assert(e5.getMessage.contains("shingleN=3") &&
+      e5.getMessage.contains("shingleN=5"))
+    assert(Dedup.appendShinglePostingsOnce(more, "text", "doc_id", s"$dir/sh",
+      "run", 0L, shingleN = 3))
 
     // legacy artifacts (no stamp column): the guard CANNOT verify the
     // width, so a bare append refuses with the rebuild/override hint —
@@ -2641,32 +2632,32 @@ class OperatorsSpec extends SparkSpec {
     // (must not grow _gk/_sn into a stampless directory).
     Seq((11L, 5L)).toDF("_h", "_n").write.parquet(s"$dir/gleg")
     val e7 = intercept[IllegalArgumentException] {
-      Dedup.appendGramIndex(more, "text", "doc_id", s"$dir/gleg", k = 4)
+      Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/gleg", "run", 0L, k = 4)
     }
     assert(e7.getMessage.contains("allowUnverifiedWidth"), s"$e7")
-    Dedup.appendGramIndex(more, "text", "doc_id", s"$dir/gleg", k = 4,
-      allowUnverifiedWidth = true)
+    assert(Dedup.appendGramIndexOnce(more, "text", "doc_id", s"$dir/gleg",
+      "run", 0L, k = 4, allowUnverifiedWidth = true))
     assert(spark.read.parquet(s"$dir/gleg").columns.sorted.toSeq ==
       Seq("_h", "_n"), "legacy gram append must not mix schemas")
     Seq((1L, 7)).toDF("_k", "_s").write.parquet(s"$dir/shleg")
     val e8 = intercept[IllegalArgumentException] {
-      Dedup.appendShinglePostings(more, "text", "doc_id", s"$dir/shleg")
+      Dedup.appendShinglePostingsOnce(more, "text", "doc_id", s"$dir/shleg", "run", 0L)
     }
     assert(e8.getMessage.contains("allowUnverifiedWidth"), s"$e8")
-    Dedup.appendShinglePostings(more, "text", "doc_id", s"$dir/shleg",
-      allowUnverifiedWidth = true)
+    assert(Dedup.appendShinglePostingsOnce(more, "text", "doc_id",
+      s"$dir/shleg", "run", 0L, allowUnverifiedWidth = true))
     assert(spark.read.parquet(s"$dir/shleg").columns.sorted.toSeq ==
       Seq("_k", "_s"), "legacy shingle append must not mix schemas")
     // the signature family has the same discipline (pre-_sn artifact)
     Seq((1L, Seq(101, 102), (1L to 16L).toSeq))
       .toDF("doc_id", "_sh", "_sig").write.parquet(s"$dir/sigleg")
     val e9 = intercept[IllegalArgumentException] {
-      Dedup.appendSignatures(more, "text", "doc_id", s"$dir/sigleg",
-        shingleN = 5, numHashes = 16)
+      Dedup.appendSignaturesOnce(more, "text", "doc_id", s"$dir/sigleg",
+        "run", 0L, shingleN = 5, numHashes = 16)
     }
     assert(e9.getMessage.contains("allowUnverifiedWidth"), s"$e9")
-    Dedup.appendSignatures(more, "text", "doc_id", s"$dir/sigleg",
-      shingleN = 3, numHashes = 16, allowUnverifiedWidth = true)
+    assert(Dedup.appendSignaturesOnce(more, "text", "doc_id", s"$dir/sigleg",
+      "run", 0L, shingleN = 3, numHashes = 16, allowUnverifiedWidth = true))
     assert(!spark.read.parquet(s"$dir/sigleg").columns.contains("_sn"),
       "legacy signature append must not mix schemas")
   }

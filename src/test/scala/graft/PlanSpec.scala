@@ -433,6 +433,16 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Every line of the main sources that `hit` accepts, as `path:n: line`. */
+  private def mainSourceLines(hit: String => Boolean): Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if hit(l) => s"$p:${i + 1}: ${l.trim}"
+      }).toVector
+  }
+
   test("every cache in main sources goes through CacheRegistry") {
     // Round-8 finding class: a raw .cache()/.persist() outside the
     // registry squats in the block manager past CacheRegistry.releaseAll
@@ -440,19 +450,10 @@ class PlanSpec extends SparkSpec {
     // discipline at the SOURCE level: the only allowed direct persist is
     // Clustering's checkpoint staging, which unpersists itself within the
     // same expression (persist -> checkpoint -> unpersist).
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val hits = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.toString.endsWith("CacheRegistry.scala"))
-      .flatMap { p =>
-        val lines = java.nio.file.Files.readAllLines(p).asScala
-        lines.zipWithIndex.collect {
-          case (l, i) if (l.contains(".cache()") || l.contains(".persist(")) &&
-            !l.trim.startsWith("//") && !l.trim.startsWith("*") =>
-            s"$p:${i + 1}: ${l.trim}"
-        }
-      }.toVector
+    val hits = mainSourceLines(l =>
+        (l.contains(".cache()") || l.contains(".persist(")) &&
+          !l.trim.startsWith("//") && !l.trim.startsWith("*"))
+      .filterNot(_.contains("CacheRegistry.scala:"))
     val allowed = hits.filter { h =>
       (h.contains("Clustering.scala") || h.contains("TermStats.scala")) &&
         h.contains("persist")
@@ -468,17 +469,23 @@ class PlanSpec extends SparkSpec {
     val termStats = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/main/scala/graft/operators/TermStats.scala")))
     assert(termStats.contains("tf.unpersist") && termStats.contains("dl.unpersist"),
-      "appendTextIndex's direct persists lost their paired finally-unpersist")
+      "appendTextIndexOnce's direct persists lost their paired finally-unpersist")
   }
 
   test("every temp directory in main sources comes from the Fixture registry") {
     // the registry deletes what it creates; a raw one elsewhere leaks per run
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala"))
-    val hits = files.flatMap(p => java.nio.file.Files.readAllLines(p).asScala
-      .filter(_.contains("createTempDirectory")).map(l => s"$p: $l")).toVector
+    val hits = mainSourceLines(_.contains("createTempDirectory"))
     assert(hits.size == 1 && hits.head.contains("graft/Fixtures.scala:"), hits.mkString("\n"))
+  }
+
+  test("the only append-mode write in main sources is the telemetry history flush") {
+    // every index append stages and moves through IndexLifecycle.appendOnce
+    // (exactly-once under replay); a plain append-mode write into a live
+    // artifact double-counts when its batch is redelivered
+    val hits = mainSourceLines(l =>
+      l.contains("mode(\"append\")") || l.contains("SaveMode.Append"))
+    assert(hits.size == 1 && hits.head.contains("operators/Telemetry.scala:") &&
+      hits.head.contains("drained.toDF()"), hits.mkString("\n"))
   }
 
   test("kmeans assignment is scan-stage: centroids ride as literals, no shuffle") {
@@ -676,8 +683,8 @@ class PlanSpec extends SparkSpec {
     // after an append both listings change, so (N, Σdl) and df all miss;
     // the artifact relations are re-read first, outside the count (their
     // parquet schema read is a job of its own, paid with or without the memo)
-    TermStats.appendTextIndex(Seq((4L, "delta epsilon")).toDF("doc_id", "text"),
-      "text", "doc_id", idx)
+    TermStats.appendTextIndexOnce(Seq((4L, "delta epsilon")).toDF("doc_id", "text"),
+      "text", "doc_id", idx, "miss-run", 0L)
     val dir = TermStats.resolveIndexDir(spark, idx)
     Seq("postings", "stats", "terms").foreach(t => Tables.artifact(spark, s"$dir/$t"))
     val fullMiss = jobsOf("bm25-full-miss")(probe(Seq("beta", "delta")))

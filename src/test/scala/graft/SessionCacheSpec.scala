@@ -79,7 +79,7 @@ class SessionCacheSpec extends SparkSpec {
     val before = Tables.artifact(spark, dir).count()
     // memo hit: same relation object served for the unchanged dir
     assert(Tables.artifact(spark, dir) eq Tables.artifact(spark, dir))
-    Dedup.appendShinglePostings(half2, "text", "doc_id", root)
+    assert(Dedup.appendShinglePostingsOnce(half2, "text", "doc_id", root, "run", 0L))
     val after = Tables.artifact(spark, dir).count()
     assert(after > before,
       s"post-append probe must see appended rows ($before -> $after)")
@@ -89,6 +89,33 @@ class SessionCacheSpec extends SparkSpec {
         minContainment = 0.5, maxDf = 20)
       .select("key_a", "key_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 3L)), s"expected (1,3) in $pairs")
+  }
+
+  test("Tables.artifact: an IVF probe that hit the memo sees rows an append " +
+       "moved into an EXISTING _list= subdirectory") {
+    // the fingerprint lists only the version directory's top level, where
+    // such an append changes no entry name
+    import graft.operators.{IndexLifecycle, Similarity}
+    val emb = spark.range(400).select(col("id").as("vec_id"), array((1 to 64)
+      .map(j => cos(col("id") * 0.37 + j).cast("float")): _*).as("embedding"))
+    val q = Array.tabulate(64)(j => math.cos(j + 1.0).toFloat) // vec_id 0
+    def ivf(rows: org.apache.spark.sql.DataFrame): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_ivfmemo_") + "/idx"
+      Similarity.ivfBuild(rows, "embedding", "vec_id", root, dim = 64, nlist = 4)
+      root
+    }
+    def probe(root: String) = Similarity.ivfTopKPrebuilt(spark, root, "embedding",
+      "vec_id", q, 20, nlist = 4, nprobe = 4).collect().map(_.toString).toSeq
+    val root = ivf(emb.filter(col("vec_id") >= 100))
+    val dir = IndexLifecycle.resolveDir(spark, root)
+    def lists() = new java.io.File(dir).list().filter(_.startsWith("_list=")).sorted.toSeq
+    assert(!probe(root).exists(_.startsWith("[0,")))
+    assert(Tables.artifact(spark, dir) eq Tables.artifact(spark, dir), "memo hit")
+    val before = lists()
+    assert(Similarity.appendIvfIndexOnce(emb.filter(col("vec_id") < 100),
+      "embedding", "vec_id", root, "memo-run", 0L))
+    assert(lists() == before, "every appended row must land in an existing list")
+    assert(probe(root) == probe(ivf(emb)), "a memoized IVF probe missed appended rows")
   }
 
   test("Tables.artifact: a file swapped for a same-size, same-mtime file " +

@@ -321,6 +321,15 @@ class StreamingSpec extends SparkSpec {
       (4L, "NEW", Some("v4"))))
   }
 
+  /** The BM25 ranking of "spark" over a text index: the probe the
+    * index-maintenance tests compare between grown and rebuilt indexes. */
+  private def bm25(idx: String): Seq[(Long, Double)] = graft.operators.TermStats
+    .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
+    .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   /** Shared parquet command-source scaffolding for the file-backed
     * change-feed tests: one writer and one readStream construction, so a
     * schema or source-option change hits every test at once. */
@@ -833,8 +842,7 @@ class StreamingSpec extends SparkSpec {
       (100L, "the quick brown fox jumps over the lazy dog again and again"),
       (101L, "an entirely different reference document about spark engines"))
       .toDF("doc_id", "text")
-    val sigPath = java.nio.file.Files
-      .createTempDirectory("graft-stream-sig").toString + "/sigs"
+    val sigPath = tmpDir("graft-stream-sig") + "/sigs"
     Dedup.buildSignatures(corpus, "text", "doc_id", sigPath)
 
     val input = MemoryStream[(Long, String)]
@@ -875,8 +883,7 @@ class StreamingSpec extends SparkSpec {
 
     val corpus = Seq((100L, "seed reference document about distributed engines"))
       .toDF("doc_id", "text")
-    val sigPath = java.nio.file.Files
-      .createTempDirectory("graft-stream-sig2").toString + "/sigs"
+    val sigPath = tmpDir("graft-stream-sig2") + "/sigs"
     Dedup.buildSignatures(corpus, "text", "doc_id", sigPath)
 
     val input = MemoryStream[(Long, String)]
@@ -884,7 +891,7 @@ class StreamingSpec extends SparkSpec {
     val q = input.toDS().toDF("doc_id", "text")
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val kept = Dedup.dedupAgainstCorpusPrebuilt(spark, sigPath, b.toDF(),
           "text", "doc_id", threshold = 0.5)
         val keptRows = kept.select("doc_id", "text").collect()
@@ -892,7 +899,7 @@ class StreamingSpec extends SparkSpec {
           import spark.implicits._
           val keptDf = keptRows.map(r => (r.getLong(0), r.getString(1)))
             .toSeq.toDF("doc_id", "text")
-          Dedup.appendSignatures(keptDf, "text", "doc_id", sigPath)
+          Dedup.appendSignaturesOnce(keptDf, "text", "doc_id", sigPath, "crawl", batchId)
         }
         survivors.synchronized { survivors ++= keptRows.map(_.getLong(0)); () }
       }
@@ -917,15 +924,14 @@ class StreamingSpec extends SparkSpec {
        "accepted survivors extend it in place") {
     // the substring-level incremental loop: clean batch N's token spans
     // against the corpus gram index, append the cleaned survivors' grams
-    // (one append-mode write — the artifact is never read-modify-
-    // rewritten), and batch N+1's copy of a batch-N passage now strips too
+    // (the artifact is never read-modify-rewritten), and batch N+1's copy
+    // of a batch-N passage now strips too
     import graft.operators.Dedup
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
 
     val corpus = Seq((100L, "c1 c2 c3 c4 c5")).toDF("doc_id", "text")
-    val gramPath = java.nio.file.Files
-      .createTempDirectory("graft-stream-gram").toString + "/grams"
+    val gramPath = tmpDir("graft-stream-gram") + "/grams"
     Dedup.buildGramIndex(corpus, "text", "doc_id", gramPath, k = 3)
 
     val input = MemoryStream[(Long, String)]
@@ -933,15 +939,15 @@ class StreamingSpec extends SparkSpec {
     val q = input.toDS().toDF("doc_id", "text")
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val cleaned = Dedup.substringDedupPrebuilt(spark, gramPath, b.toDF(),
             "text", "doc_id", k = 3)
           .collect().map(r => (r.getLong(0), r.getString(3)))
         val kept = cleaned.filter(_._2.nonEmpty)
         if (kept.nonEmpty) {
           import spark.implicits._
-          Dedup.appendGramIndex(
-            kept.toSeq.toDF("doc_id", "text"), "text", "doc_id", gramPath, k = 3)
+          Dedup.appendGramIndexOnce(kept.toSeq.toDF("doc_id", "text"),
+            "text", "doc_id", gramPath, "crawl-gram", batchId, k = 3)
         }
         out.synchronized { out ++= cleaned; () }
       }
@@ -965,24 +971,23 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming index maintenance: crawl batches append to the inverted " +
        "text index; queries between batches see the grown corpus") {
-    // the serving loop: ingest crawl batches with appendTextIndex (three
-    // append-mode writes, no rebuild), query with bm25TopKPrebuilt between
-    // batches — rankings reflect every accepted doc so far
+    // the serving loop: ingest crawl batches with appendTextIndexOnce (no
+    // rebuild), query with bm25TopKPrebuilt between batches — rankings
+    // reflect every accepted doc so far
     import graft.operators.TermStats
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
 
     val seed = Seq((100L, "spark engine overview")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-stream-text").toString + "/idx"
+    val idx = tmpDir("graft-stream-text") + "/idx"
     TermStats.buildTextIndex(seed, "text", "doc_id", idx)
 
     val input = MemoryStream[(Long, String)]
     val q = input.toDS().toDF("doc_id", "text")
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        TermStats.appendTextIndex(b.toDF(), "text", "doc_id", idx); ()
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        TermStats.appendTextIndexOnce(b.toDF(), "text", "doc_id", idx, "crawl", batchId); ()
       }
       .start()
 
@@ -999,31 +1004,26 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(hits() == Set(100L, 1L, 3L), s"batch-2 doc must rank: ${hits()}")
     // and the grown index still equals a cold rebuild over everything
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft-stream-text2").toString + "/idx"
+    val rebuilt = tmpDir("graft-stream-text2") + "/idx"
     TermStats.buildTextIndex(
       seed.union(Seq((1L, "spark spark tuning notes"), (2L, "unrelated text"),
         (3L, "more spark content here")).toDF("doc_id", "text")),
       "text", "doc_id", rebuilt)
-    val a = TermStats.bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = TermStats.bm25TopKPrebuilt(spark, rebuilt, "doc_id", Seq("spark"), 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(a == b, s"append-grown index drifted from rebuild: $a vs $b")
+    assert(bm25(idx) == bm25(rebuilt),
+      s"append-grown index drifted from rebuild: ${bm25(idx)} vs ${bm25(rebuilt)}")
   }
 
   test("text index compacts IN PLACE under a live reader: a pre-compact " +
        "DataFrame keeps its version's files, new probes see the compacted " +
        "version, vacuum drops only non-current versions") {
     import graft.operators.TermStats
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-cas-text").toString + "/idx"
+    val idx = tmpDir("graft-cas-text") + "/idx"
     val seed = Seq((1L, "spark engine overview"),
       (2L, "unrelated prose entirely")).toDF("doc_id", "text")
     TermStats.buildTextIndex(seed, "text", "doc_id", idx)
-    TermStats.appendTextIndex(
+    assert(TermStats.appendTextIndexOnce(
       Seq((3L, "spark spark tuning")).toDF("doc_id", "text"),
-      "text", "doc_id", idx)
+      "text", "doc_id", idx, "cas-run", 0L))
     assert(TermStats.currentIndexVersion(spark, idx).contains(1L))
 
     // the "live reader": a probe whose plan (and file listing) was built
@@ -1044,9 +1044,7 @@ class StreamingSpec extends SparkSpec {
       s"pre-compact reader torn by in-place compaction: $stale vs $expected")
     // fresh probe resolves v=2; results identical (compaction is a layout
     // change, not a semantic one)
-    val after = TermStats
-      .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val after = bm25(idx)
     assert(after == expected,
       s"compacted index drifted from pre-compact results: $after vs $expected")
 
@@ -1054,10 +1052,7 @@ class StreamingSpec extends SparkSpec {
     val left = new java.io.File(idx).listFiles().map(_.getName)
       .filter(_.startsWith("v=")).toSet
     assert(left == Set("v=2"), s"vacuum must keep only the current version: $left")
-    val postVacuum = TermStats
-      .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(postVacuum == expected, "probe must stay green after vacuum")
+    assert(bm25(idx) == expected, "probe must stay green after vacuum")
   }
 
   test("ChangeFeed-driven index maintenance end to end: each micro-batch's " +
@@ -1067,17 +1062,16 @@ class StreamingSpec extends SparkSpec {
     // carries corpus writes; foreachBatch diffs the keyed snapshot with
     // ChangeFeed (the reference's per-write NEW/MODIFIED/DELETED algebra,
     // per-batch here), and the NEW rows drive all three append paths under
-    // the single-writer contract (sequential inside one batch callback).
-    // This pins the RAW appends' happy path (N batches == rebuild); the
-    // production form of this exact loop uses the appendXxxOnce replay
-    // guards — crash/replay behavior is pinned by the two tests below.
+    // the single-writer contract (sequential inside one batch callback),
+    // each keyed by the callback's own batchId. This pins the happy path
+    // (N batches == rebuild); crash/replay behavior is pinned by the two
+    // tests below.
     import graft.operators.{Dedup, TermStats}
     import graft.streaming.ChangeFeed
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-maint").toString
+    val dir = tmpDir("graft-stream-maint")
     val textIdx = s"$dir/text"
     val gramIdx = s"$dir/grams"
     val sigIdx = s"$dir/sigs"
@@ -1096,16 +1090,16 @@ class StreamingSpec extends SparkSpec {
     val q = input.toDS().toDF("doc_id", "text")
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val batchRows = b.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
         val newRows = corpus ++ batchRows
         val fresh = ChangeFeed.diff(
             corpus.toDF("doc_id", "text"), newRows.toDF("doc_id", "text"), "doc_id")
           .filter(col("_status") === ChangeFeed.New)
           .select(col("doc_id"), col("text"))
-        TermStats.appendTextIndex(fresh, "text", "doc_id", textIdx)
-        Dedup.appendGramIndex(fresh, "text", "doc_id", gramIdx)
-        Dedup.appendSignatures(fresh, "text", "doc_id", sigIdx)
+        TermStats.appendTextIndexOnce(fresh, "text", "doc_id", textIdx, "maint", batchId)
+        Dedup.appendGramIndexOnce(fresh, "text", "doc_id", gramIdx, "maint", batchId)
+        Dedup.appendSignaturesOnce(fresh, "text", "doc_id", sigIdx, "maint", batchId)
         corpus = newRows
         ()
       }
@@ -1133,9 +1127,6 @@ class StreamingSpec extends SparkSpec {
     Dedup.buildSignatures(all, "text", "doc_id", sigIdx2)
 
     // text probe: identical BM25 rankings (scores included)
-    def bm25(idx: String) = TermStats
-      .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(textIdx) == bm25(textIdx2),
       s"text index drifted: ${bm25(textIdx)} vs ${bm25(textIdx2)}")
     assert(bm25(textIdx).map(_._1).contains(1L),
@@ -1178,8 +1169,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-replay-maint").toString
+    val dir = tmpDir("graft-replay-maint")
     val textIdx = s"$dir/text"; val gramIdx = s"$dir/grams"
     val ckpt = s"$dir/ckpt"
     val runId = ckpt // restart-stable (the SnapshotSink rule)
@@ -1233,9 +1223,6 @@ class StreamingSpec extends SparkSpec {
     TermStats.buildTextIndex(all, "text", "doc_id", textIdx2)
     Dedup.buildGramIndex(all, "text", "doc_id", gramIdx2)
 
-    def bm25(idx: String) = TermStats
-      .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(textIdx) == bm25(textIdx2),
       s"replayed text append double-counted: ${bm25(textIdx)} vs ${bm25(textIdx2)}")
 
@@ -1259,8 +1246,7 @@ class StreamingSpec extends SparkSpec {
     // every file landed, only the marker is missing, and a naive replay
     // would double every df/tf partial.
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-replay-torn").toString
+    val dir = tmpDir("graft-replay-torn")
     val idx = s"$dir/idx"
     val runId = "torn-run"
     TermStats.buildTextIndex(
@@ -1296,9 +1282,6 @@ class StreamingSpec extends SparkSpec {
       batches.flatMap(_._2)).toDF("doc_id", "text")
     val idx2 = s"$dir/idx2"
     TermStats.buildTextIndex(all, "text", "doc_id", idx2)
-    def bm25(p: String) = TermStats
-      .bm25TopKPrebuilt(spark, p, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(idx) == bm25(idx2),
       s"torn-replay index drifted from rebuild: ${bm25(idx)} vs ${bm25(idx2)}")
 
@@ -1314,8 +1297,7 @@ class StreamingSpec extends SparkSpec {
        "orphan the partial files and the replay would double-count); " +
        "abandonTornAppends discards the attempt and un-marks the batch") {
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-torn-compact").toString
+    val dir = tmpDir("graft-torn-compact")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1348,9 +1330,6 @@ class StreamingSpec extends SparkSpec {
     assert(dropped.nonEmpty, "abandon must report what it discarded")
     assert(IndexLifecycle.pendingIntents(spark, idx).isEmpty)
     assert(IndexLifecycle.lastAppendedBatch(spark, idx, "dead-run").isEmpty)
-    def bm25(p: String) = TermStats
-      .bm25TopKPrebuilt(spark, p, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val cleanIdx = s"$dir/clean"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1360,16 +1339,16 @@ class StreamingSpec extends SparkSpec {
     assert(TermStats.appendTextIndexOnce(batch, "text", "doc_id", idx,
       "dead-run", 0L), "post-abandon replay must append, not no-op")
     TermStats.compactTextIndexInPlace(spark, idx) // now clean: compacts fine
-    TermStats.appendTextIndex(batch.withColumn("doc_id", col("doc_id") + 10),
-      "text", "doc_id", idx)
+    assert(TermStats.appendTextIndexOnce(
+      batch.withColumn("doc_id", col("doc_id") + 10), "text", "doc_id", idx,
+      "dead-run", 1L))
   }
 
   test("an intent left by a crash AFTER the marker write is committed " +
        "debris, not a torn append: compaction is not blocked, and abandon " +
        "sweeps only the manifest — NEVER the committed batch's live files") {
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-marked-debris").toString
+    val dir = tmpDir("graft-marked-debris")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1400,9 +1379,6 @@ class StreamingSpec extends SparkSpec {
         "run-a", 0L, failAt = "marked")
     }
     IndexLifecycle.abandonTornAppends(spark, idx2)
-    def bm25(p: String) = TermStats
-      .bm25TopKPrebuilt(spark, p, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val rebuilt = s"$dir/rebuilt"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview"), (2L, "spark spark tuning"))
@@ -1423,8 +1399,7 @@ class StreamingSpec extends SparkSpec {
     // the very protocol built to prevent it. Simulate the collision by
     // planting a marker at MY tag address stamped with ANOTHER raw runId.
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tag-collision").toString
+    val dir = tmpDir("graft-tag-collision")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1448,9 +1423,6 @@ class StreamingSpec extends SparkSpec {
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview"), (2L, "spark spark tuning"))
         .toDF("doc_id", "text"), "text", "doc_id", idx2)
-    def bm25(p: String) = TermStats
-      .bm25TopKPrebuilt(spark, p, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(idx) == bm25(idx2),
       "post-collision artifact must equal the exactly-once rebuild")
 
@@ -1476,8 +1448,7 @@ class StreamingSpec extends SparkSpec {
        "pending (appending on top would bury the partial files its replay " +
        "must remove); the torn run's own replay still self-heals") {
     import graft.operators.TermStats
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-foreign-intent").toString
+    val dir = tmpDir("graft-foreign-intent")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1504,9 +1475,6 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "spark engine overview"), (2L, "spark spark tuning"),
         (3L, "more spark content")).toDF("doc_id", "text"),
       "text", "doc_id", idx2)
-    def bm25(p: String) = TermStats
-      .bm25TopKPrebuilt(spark, p, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(bm25(idx) == bm25(idx2))
   }
 
@@ -1518,8 +1486,7 @@ class StreamingSpec extends SparkSpec {
     // Neither is this run's problem: classifying them would block every
     // replay (the self-heal contract) until manual cleanup.
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tmp-debris").toString
+    val dir = tmpDir("graft-tmp-debris")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1567,35 +1534,30 @@ class StreamingSpec extends SparkSpec {
     // must record their progress — a driver that skips them leaves holes
     // the restore fence reads as a mid-stream resume
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-empty-batch").toString
+    val dir = tmpDir("graft-empty-batch")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
       "text", "doc_id", idx)
-    def bm25() = TermStats
-      .bm25TopKPrebuilt(spark, idx, "doc_id", Seq("spark"), k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val before = bm25()
+    val before = bm25(idx)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(TermStats.appendTextIndexOnce(empty, "text", "doc_id", idx,
       "empty-run", 0L), "an empty batch still commits")
     assert(IndexLifecycle.lastAppendedBatch(spark, idx, "empty-run")
       == Some(0L), "the marker must advance past the empty batch")
-    assert(bm25() == before, "an empty append must not change the served data")
+    assert(bm25(idx) == before, "an empty append must not change the served data")
     assert(IndexLifecycle.pendingIntents(spark, idx).isEmpty)
     // and the next real batch appends normally on top
     assert(TermStats.appendTextIndexOnce(
       Seq((2L, "spark spark tuning")).toDF("doc_id", "text"),
       "text", "doc_id", idx, "empty-run", 1L))
-    assert(bm25() != before)
+    assert(bm25(idx) != before)
   }
 
   test("auditArtifacts reports replay state per artifact: run markers " +
        "(tag, raw runId, last batch) and the restore epoch") {
     import graft.operators.{IndexLifecycle, TermStats}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-audit-replay").toString
+    val dir = tmpDir("graft-audit-replay")
     val idx = s"$dir/idx"
     TermStats.buildTextIndex(
       Seq((1L, "spark engine overview")).toDF("doc_id", "text"),
@@ -1622,7 +1584,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming crawl keeps the PQ serving index fresh: appended " +
        "micro-batches == one-shot rebuild with the same frozen codebook") {
     // the vector half of the maintenance loop (the text half is the test
-    // above): an embedding stream drives appendPqIndex per micro-batch
+    // above): an embedding stream drives appendPqIndexOnce per micro-batch
     // under the single-writer contract; the frozen codebook guarantees
     // N streamed appends are probe-indistinguishable from one build over
     // the final corpus with that codebook
@@ -1635,8 +1597,7 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "embedding")
     val seed = emb.filter(col("vec_id") >= 200)
 
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stream-pq").toString
+    val dir = tmpDir("graft-stream-pq")
     val idx = s"$dir/idx"
     val cb = Similarity.pqBuild(seed, "embedding", "vec_id", idx,
       m = 8, ksub = 16, dim = 64)
@@ -1645,9 +1606,9 @@ class StreamingSpec extends SparkSpec {
     val q = input.toDS().toDF("vec_id", "embedding")
       .writeStream.outputMode("append")
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Similarity.appendPqIndex(b, "embedding", "vec_id", idx,
-          m = 8, dim = 64)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        Similarity.appendPqIndexOnce(b, "embedding", "vec_id", idx,
+          "crawl-pq", batchId, m = 8, dim = 64)
         ()
       }
       .start()

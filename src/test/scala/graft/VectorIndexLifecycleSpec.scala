@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Vector-artifact lifecycle parity with the text index: CAS versioning
   * (rebuild under a live reader, vacuum), frozen-codebook/centroid append
   * (append == rebuild on probe results), legacy-index guards, and the
-  * codebook-drift measurement the appendPqIndex scaladoc cites. */
+  * codebook-drift measurement the appendPqIndexOnce scaladoc cites. */
 class VectorIndexLifecycleSpec extends SparkSpec {
 
   private lazy val emb =
@@ -22,6 +22,28 @@ class VectorIndexLifecycleSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  /** The routed PQ-IVF probe re-derived from first principles with the
+    * frozen constants: encode the WHOLE corpus with `cb`, route on the
+    * seeded centroids, restrict to the probed lists, ADC-score — what an
+    * append-grown routed index must be indistinguishable from. */
+  private def pqIvfRederived(cb: Array[Array[Long]], nlist: Int,
+                             nprobe: Int, k: Int): Seq[(Long, Double)] = {
+    val cents = Similarity.ivfCentroids(nlist, 64, 7L)
+    val assign = cents.indices.map { i =>
+      struct(graft.functions.VectorFunctions
+        .cosine(col("embedding"), cents(i)).as("s"), lit(i).as("i"))
+    }
+    val routed = Similarity.pqEncode(
+      emb.withColumn("_list", array_max(array(assign: _*))("i")),
+      "embedding", "vec_id", cb, m = 8, dim = 64, keep = Seq("_list"))
+    val qScores = cents.map(_.zip(queryVec)
+      .map { case (x, y) => x.toDouble * y.toDouble }.sum)
+    val probed = qScores.zipWithIndex.sortBy(-_._1).take(nprobe).map(_._2)
+    rows(Similarity.pqAdcTopK(
+      routed.filter(col("_list").isin(probed: _*)),
+      "codes", "key", "vec_id", queryVec, k, cb, m = 8, dim = 64))
+  }
+
   test("pq append == rebuild with the same frozen codebook (probe equality)") {
     val build = emb.filter(col("vec_id") >= 100)
     val batch = emb.filter(col("vec_id") < 100)
@@ -29,8 +51,8 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     val grown = tmp("graft-pq-append")
     val cb = Similarity.pqBuild(build, "embedding", "vec_id", grown,
       m = 8, ksub = 16, dim = 64)
-    Similarity.appendPqIndex(batch, "embedding", "vec_id", grown,
-      m = 8, dim = 64)
+    assert(Similarity.appendPqIndexOnce(batch, "embedding", "vec_id", grown,
+      "pq-run", 0L, m = 8, dim = 64))
 
     // the reference ranking: the WHOLE corpus encoded in one build with
     // the SAME frozen codebook — what append must be indistinguishable from
@@ -83,38 +105,29 @@ class VectorIndexLifecycleSpec extends SparkSpec {
       run, 0L))
     assert(!Similarity.appendIvfIndexOnce(batch, "embedding", "vec_id", ivf,
       run, 0L))
-    // append == raw append on probe results (the raw path is already
-    // pinned append==rebuild elsewhere; here we pin the staged+moved
-    // partition layout reads identically to a direct partitioned append)
-    val ivfRaw = tmp("graft-ivf-once-raw")
-    Similarity.ivfBuild(build, "embedding", "vec_id", ivfRaw, dim = 64, nlist = 4)
-    Similarity.appendIvfIndex(batch, "embedding", "vec_id", ivfRaw)
+    // append == rebuild on probe results: seeded centroids are
+    // parameter-derived, so the full-corpus build routes every row to the
+    // list the staged+moved partition layout must have landed it in
+    val ivfRebuilt = tmp("graft-ivf-once-rebuild")
+    Similarity.ivfBuild(emb, "embedding", "vec_id", ivfRebuilt, dim = 64,
+      nlist = 4)
     assert(rows(Similarity.ivfTopKPrebuilt(spark, ivf, "embedding", "vec_id",
         queryVec, 20, nlist = 4, nprobe = 4))
-      == rows(Similarity.ivfTopKPrebuilt(spark, ivfRaw, "embedding", "vec_id",
-        queryVec, 20, nlist = 4, nprobe = 4)),
-      "replay-guarded IVF append drifted from a raw append")
+      == rows(Similarity.ivfTopKPrebuilt(spark, ivfRebuilt, "embedding",
+        "vec_id", queryVec, 20, nlist = 4, nprobe = 4)),
+      "replay-guarded IVF append drifted from the rebuild")
 
     val pqivf = tmp("graft-pqivf-once")
-    Similarity.pqIvfBuild(build, "embedding", "vec_id", pqivf,
+    val pqivfCb = Similarity.pqIvfBuild(build, "embedding", "vec_id", pqivf,
       m = 8, ksub = 16, dim = 64, nlist = 4)
     assert(Similarity.appendPqIvfIndexOnce(batch, "embedding", "vec_id",
       pqivf, run, 7L, m = 8, dim = 64))
     assert(!Similarity.appendPqIvfIndexOnce(batch, "embedding", "vec_id",
       pqivf, run, 7L, m = 8, dim = 64))
-    val pqivfRaw = tmp("graft-pqivf-once-raw")
-    Similarity.pqIvfBuild(build, "embedding", "vec_id", pqivfRaw,
-      m = 8, ksub = 16, dim = 64, nlist = 4)
-    // NOTE different corpora would have different codebooks — rebuild the
-    // raw twin from the same build half so both artifacts share frozen
-    // constants, then raw-append the same batch
-    Similarity.appendPqIvfIndex(batch, "embedding", "vec_id", pqivfRaw,
-      m = 8, dim = 64)
     assert(rows(Similarity.pqIvfTopK(spark, pqivf, "vec_id", queryVec, 20,
         m = 8, dim = 64, nlist = 4, nprobe = 2))
-      == rows(Similarity.pqIvfTopK(spark, pqivfRaw, "vec_id", queryVec, 20,
-        m = 8, dim = 64, nlist = 4, nprobe = 2)),
-      "replay-guarded routed append drifted from a raw append")
+      == pqIvfRederived(pqivfCb, nlist = 4, nprobe = 2, k = 20),
+      "replay-guarded routed append drifted from the re-derivation")
   }
 
   test("append with a mismatched m is refused loudly (flat and ivf forms) " +
@@ -124,8 +137,8 @@ class VectorIndexLifecycleSpec extends SparkSpec {
       "vec_id", idx, m = 8, ksub = 16, dim = 64)
     val batch = emb.filter(col("vec_id") < 100)
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendPqIndex(batch, "embedding", "vec_id", idx,
-        m = 4, dim = 64)
+      Similarity.appendPqIndexOnce(batch, "embedding", "vec_id", idx,
+        "m-run", 0L, m = 4, dim = 64)
     }
     assert(e.getMessage.contains("m=4") && e.getMessage.contains("m=8"),
       s"refusal must name both widths: ${e.getMessage}")
@@ -134,13 +147,13 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     Similarity.pqIvfBuild(emb.filter(col("vec_id") >= 100), "embedding",
       "vec_id", ivf, m = 8, ksub = 16, dim = 64, nlist = 4)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.appendPqIvfIndex(batch, "embedding", "vec_id", ivf,
-        m = 16, dim = 64)
+      Similarity.appendPqIvfIndexOnce(batch, "embedding", "vec_id", ivf,
+        "m-run", 0L, m = 16, dim = 64)
     }
     assert(e2.getMessage.contains("m=16") && e2.getMessage.contains("m=8"))
     // the matching m still appends fine after the refusals
-    Similarity.appendPqIndex(batch, "embedding", "vec_id", idx,
-      m = 8, dim = 64)
+    assert(Similarity.appendPqIndexOnce(batch, "embedding", "vec_id", idx,
+      "m-run", 0L, m = 8, dim = 64))
     assert(rows(Similarity.pqTopKPrebuilt(spark, idx, "vec_id", queryVec, 5))
       .nonEmpty)
   }
@@ -187,7 +200,7 @@ class VectorIndexLifecycleSpec extends SparkSpec {
 
     val grown = tmp("graft-ivf-append")
     Similarity.ivfBuild(build, "embedding", "vec_id", grown, dim = 64)
-    Similarity.appendIvfIndex(batch, "embedding", "vec_id", grown)
+    assert(Similarity.appendIvfIndexOnce(batch, "embedding", "vec_id", grown, "run", 0L))
 
     val rebuilt = tmp("graft-ivf-rebuild")
     Similarity.ivfBuild(emb, "embedding", "vec_id", rebuilt, dim = 64)
@@ -206,7 +219,7 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     build.withColumn("_list", lit(0))
       .write.partitionBy("_list").parquet(legacy)
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendIvfIndex(batch, "embedding", "vec_id", legacy)
+      Similarity.appendIvfIndexOnce(batch, "embedding", "vec_id", legacy, "run", 0L)
     }
     assert(e.getMessage.contains("_centroids"))
   }
@@ -219,29 +232,12 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     val grown = tmp("graft-pqivf-append")
     val cb = Similarity.pqIvfBuild(build, "embedding", "vec_id", grown,
       m = 8, ksub = 16, dim = 64, nlist = 16, seed = 7L)
-    Similarity.appendPqIvfIndex(batch, "embedding", "vec_id", grown,
-      m = 8, dim = 64)
+    assert(Similarity.appendPqIvfIndexOnce(batch, "embedding", "vec_id",
+      grown, "pqivf-run", 0L, m = 8, dim = 64))
 
     val got = rows(Similarity.pqIvfTopK(spark, grown, "vec_id", queryVec, 10,
       m = 8, dim = 64, nlist = 16, nprobe = 4, seed = 7L))
-
-    // re-derive from first principles with the frozen constants: encode the
-    // WHOLE corpus with cb, route on the seeded centroids, restrict to the
-    // probed lists, ADC-score
-    val cents = Similarity.ivfCentroids(16, 64, 7L)
-    val assign = cents.indices.map { i =>
-      struct(graft.functions.VectorFunctions
-        .cosine(col("embedding"), cents(i)).as("s"), lit(i).as("i"))
-    }
-    val routed = Similarity.pqEncode(
-      emb.withColumn("_list", array_max(array(assign: _*))("i")),
-      "embedding", "vec_id", cb, m = 8, dim = 64, keep = Seq("_list"))
-    val qScores = cents.map(_.zip(queryVec)
-      .map { case (x, y) => x.toDouble * y.toDouble }.sum)
-    val probed = qScores.zipWithIndex.sortBy(-_._1).take(4).map(_._2)
-    val want = rows(Similarity.pqAdcTopK(
-      routed.filter(col("_list").isin(probed: _*)),
-      "codes", "key", "vec_id", queryVec, 10, cb, m = 8, dim = 64))
+    val want = pqIvfRederived(cb, nlist = 16, nprobe = 4, k = 10)
     assert(got == want, s"routed append drifted from re-derivation: $got vs $want")
   }
 
@@ -325,7 +321,7 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     val short = emb.limit(5).select(col("vec_id"),
       slice(col("embedding"), 1, 32).as("embedding")) // dim-32 batch
     val appendErr = intercept[Exception] {
-      Similarity.appendIvfIndex(short, "embedding", "vec_id", ivf)
+      Similarity.appendIvfIndexOnce(short, "embedding", "vec_id", ivf, "run", 0L)
     }
     def mentionsDim(t: Throwable): Boolean =
       t != null && (Option(t.getMessage).exists(_.contains("append vector dim")) ||
@@ -403,8 +399,8 @@ class VectorIndexLifecycleSpec extends SparkSpec {
     val grown = tmp("graft-pq-drift-a")
     Similarity.pqBuild(build, "embedding", "vec_id", grown,
       m = 8, ksub = 16, dim = 64)
-    Similarity.appendPqIndex(batch, "embedding", "vec_id", grown,
-      m = 8, dim = 64)
+    assert(Similarity.appendPqIndexOnce(batch, "embedding", "vec_id", grown,
+      "drift-run", 0L, m = 8, dim = 64))
     val fresh = tmp("graft-pq-drift-b")
     Similarity.pqBuild(emb, "embedding", "vec_id", fresh,
       m = 8, ksub = 16, dim = 64)
